@@ -1,21 +1,19 @@
-"""Deterministic cross-engine hashing.
+"""Deterministic Spark/Python hashing.
 
 The reference uses ``String.hashCode`` sums as a cheap change-detection
 fingerprint (entities/Resource.java:55-62; CrawlOperations.java:444-456). We
 do NOT replicate Java's hashCode — the verified invariant is span equality,
-hashes are only a pre-filter (SURVEY.md §2.8 F2). We need a hash that is
-identical in Spark, DuckDB (the correctness oracle), and pure Python (the
-crawler oracle):
+hashes are only a pre-filter (SURVEY.md §2.8 F2). Where Spark and the
+pure-Python oracles must agree we use
 
     h60(s) = int(md5(s)[:15 hex chars], 16)      — 60-bit, non-negative
 
 Spark:  ``conv(substr(md5(s),1,15),16,10)`` cast to long
-DuckDB: ``('0x' || substr(md5(s),1,15))::BIGINT``
 Python: ``int(hashlib.md5(s.encode()).hexdigest()[:15], 16)``
 
 On the pure-Spark hot path (no oracle involved) we use the built-in
-``xxhash64`` which is faster; h60 appears only where cross-engine equality
-matters (datagen, correctness queries, fingerprints checked by DuckDB).
+``xxhash64`` which is faster; h60 appears only where Spark/Python equality
+matters (datagen, shard assignment, the crawler oracle).
 """
 
 from __future__ import annotations
@@ -25,7 +23,7 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: null-replacement sentinel used inside fingerprints; must match oracle_sql.
+#: null-replacement sentinel used inside span identities (operators/diff.py).
 NULL_SENTINEL = "\x00"
 
 
@@ -40,78 +38,13 @@ def h60_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def h60_sql(expr: str) -> str:
-    """DuckDB SQL twin of :func:`h60` for oracle queries."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def span_repr(kind: Column, text: Column, media_ref: Column, offset: Column) -> Column:
-    """Canonical string form of one span, used for span identity/fingerprints.
-
-    Order (``offset``) is part of span identity per the input_hint invariant
-    "span-sequence equality (kind, text, media_ref, order)".
-    """
-    return F.concat_ws(
-        "\x01",
-        F.coalesce(kind, F.lit(NULL_SENTINEL)),
-        F.coalesce(text, F.lit(NULL_SENTINEL)),
-        F.coalesce(media_ref, F.lit(NULL_SENTINEL)),
-        offset.cast("string"),
-    )
-
-
-def span_repr_py(kind: str | None, text: str | None, media_ref: str | None, offset: int) -> str:
-    parts = [
-        kind if kind is not None else NULL_SENTINEL,
-        text if text is not None else NULL_SENTINEL,
-        media_ref if media_ref is not None else NULL_SENTINEL,
-        str(offset),
-    ]
-    return "\x01".join(parts)
-
-
-def doc_fingerprint(spans: Column) -> Column:
-    """Order-sensitive document fingerprint: sum of span hashes (mod 2^64 via
-    long overflow is fine — both engines wrap identically only if we keep the
-    sum in range, so we sum 60-bit values over ≤ thousands of spans: no
-    overflow).
-
-    Analog of ``Resource.getHashCode`` (entities/Resource.java:55-62) but over
-    the full span identity including order, so fingerprint equality ⇒ very
-    probably span-sequence equality; the diff gates the expensive span diff
-    behind fingerprint inequality exactly like the reference gates its deep
-    compare (CrawlOperations.java:444-456).
-    """
-    return F.aggregate(
-        F.transform(
-            spans,
-            lambda s: F.conv(
-                F.substring(
-                    F.md5(span_repr(s["kind"], s["text"], s["media_ref"], s["offset"])), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def doc_fingerprint_fast(spans: Column) -> Column:
     """Engine-internal order-sensitive fingerprint: ``xxhash64(to_json(spans))``.
 
     One JVM hash per document instead of one md5+conv per span — the diff's
     change gate only needs *equality* semantics (fingerprint equal ⇒ skip the
     span diff), not cross-engine reproducibility, so the fast hash is correct
-    here; :func:`doc_fingerprint` (h60-based) remains the cross-engine twin
-    used by DuckDB-checked queries. to_json preserves span order and
-    distinguishes null from empty fields, so fingerprint equality ⇒
-    span-sequence equality up to a 2^-64 collision."""
+    here. to_json preserves span order and distinguishes null from empty
+    fields, so fingerprint equality ⇒ span-sequence equality up to a 2^-64
+    collision."""
     return F.xxhash64(F.to_json(spans))
-
-
-def doc_fingerprint_py(spans: list[tuple]) -> int:
-    """Pure-Python twin of :func:`doc_fingerprint`; spans are
-    (kind, text, media_ref, offset) tuples."""
-    return sum(h60_py(span_repr_py(*s)) for s in spans)

@@ -7,13 +7,8 @@ narrow projection that fuses into the WARC scan, not a DOM. The trade is
 documented and deliberate: a real parser (lxml/trafilatura) recovers more
 structure but runs row-at-a-time Python; this chain covers the WET
 baseline (drop non-content blocks, strip tags, decode the common
-entities, normalize whitespace) and the sibling boilerplate heuristics
-(line-frequency chunk dedup, quality gates) live in plans/queries.py as
-separate relational passes.
-
-The same chain is expressible verbatim in DuckDB (regexp_replace with
-'gis' flags), which is how ``text_html_extract`` twin-checks it
-value-for-value.
+entities, normalize whitespace). The narrow plan shape is pinned by
+tests/test_warc.py.
 """
 
 from __future__ import annotations
@@ -22,9 +17,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: non-content blocks dropped wholesale (case-insensitive, dotall).
-#: Spelled as a per-tag alternation, NOT a backreference — DuckDB's RE2
-#: has no backreferences and the twin must run the identical pattern.
-#: The opening tag requires a name BOUNDARY ('>' or whitespace/'/' then
+#: Spelled as a per-tag alternation, NOT a backreference, so the pattern
+#: stays RE2-compatible. The opening tag requires a name BOUNDARY ('>' or whitespace/'/' then
 #: attributes) — a bare prefix like '<style[^>]*>' would swallow custom
 #: elements ('<styled-card>…') up to the next real closing tag. RE2 has
 #: no lookahead, so the boundary is an explicit alternation.
@@ -70,15 +64,3 @@ def html_to_text(col: Column | str) -> Column:
     for ent, rep in _ENTITIES:
         c = F.replace(c, F.lit(ent), F.lit(rep))
     return F.trim(F.regexp_replace(c, _WS_RE, " "))
-
-
-def html_to_text_sql(expr: str) -> str:
-    """DuckDB twin of :func:`html_to_text` (oracle queries)."""
-    block = "|".join(rf"{_block_open(t)}.*?</{t}\s*>" for t in _BLOCK_TAGS)
-    out = f"regexp_replace({expr}, '{block}', ' ', 'gis')"
-    out = f"regexp_replace({out}, '<!--.*?-->', ' ', 'gs')"
-    out = f"regexp_replace({out}, '<[^>]*>', ' ', 'gs')"
-    for ent, rep in _ENTITIES:
-        r = rep.replace("'", "''")
-        out = f"replace({out}, '{ent}', '{r}')"
-    return f"trim(regexp_replace({out}, '\\s+', ' ', 'g'))"

@@ -21,8 +21,6 @@ Three twin implementations of the SAME spec (parity-tested):
   per-row Python), kept as the extension point for canonicalization rules a
   SQL regex can't express (IDN/punycode, %-decoding tables).
 - ``canonicalize_url_py`` — pure-Python twin feeding the crawler oracle.
-
-``base_uri`` (the faithful reference twin) stays a pure built-in expression.
 """
 
 from __future__ import annotations
@@ -33,17 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 _URL_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/:?#]+)(:[0-9]+)?([^?#]*)(\?[^#]*)?(#.*)?$"
-
-
-def base_uri(colname: str) -> Column:
-    """Faithful twin of Properties.getBaseURI (Properties.java:62-72):
-    strip after last '#'; else keep through the last '/'; else identity."""
-    return F.expr(
-        f"CASE WHEN contains({colname}, '#') THEN substring_index({colname}, '#', 1) "
-        f"WHEN contains({colname}, '/') THEN "
-        f"  substring({colname}, 1, length({colname}) - length(substring_index({colname}, '/', -1))) "
-        f"ELSE {colname} END"
-    )
 
 
 def _canon_series(s: pd.Series) -> pd.Series:
@@ -152,79 +139,3 @@ def host_of(col: Column | str) -> Column:
     """Host extraction as a pure built-in expression (stays in codegen)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.regexp_extract(c, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)", 1))
-
-
-def url_hash64(col: Column | str) -> Column:
-    """Engine-internal 64-bit URL id (xxhash64 — JVM-side, fast path)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c)
-
-
-def surt_key(col: Column | str) -> Column:
-    """SURT (Sort-friendly URI Reordering Transform) key — the canonical
-    web-archive index key (Internet Archive CDX / OpenWayback): scheme
-    dropped, host lowercased with the port and one leading ``www.``
-    removed, host labels REVERSED and comma-joined so one registrant's
-    URLs sort adjacently, then ``)`` + path (trailing slashes stripped,
-    empty ⇒ ``/``) + query with its parameters SORTED::
-
-        https://WWW.Example.ORG:443/a/b/?y=2&x=1  →  org,example)/a/b?x=1&y=2
-
-    A prefix range scan over SURT keys is how a 10^11-capture archive
-    answers "everything under this domain", and the key doubles as the
-    capture-dedup identity for dirty variants (host case, default port,
-    trailing slash, http/https, query order) of one resource — the same
-    equivalences canonicalize_url normalizes, re-expressed as a SORTABLE
-    key. Ports are dropped entirely (the upstream canonicalizer already
-    strips default ports; a non-default port stays in the raw URL record,
-    not in the index key).
-
-    Pure built-in expression (regex extract + split/reverse/array_join) —
-    stays in whole-stage codegen at any scale; twinned in DuckDB SQL by
-    plans/queries.py crawl_cdx_index."""
-    c = F.col(col) if isinstance(col, str) else col
-    host = F.regexp_replace(
-        F.lower(F.regexp_extract(c, _URL_RE, 2)), r"^www\.", ""
-    )
-    rev_host = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    raw_path = F.regexp_replace(F.regexp_extract(c, _URL_RE, 4), "/+$", "")
-    path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
-    qbody = F.regexp_replace(F.regexp_extract(c, _URL_RE, 5), r"^\?", "")
-    query = F.when(qbody == "", F.lit("")).otherwise(
-        F.concat(F.lit("?"), F.array_join(F.array_sort(F.split(qbody, "&")), "&"))
-    )
-    return F.concat(rev_host, F.lit(")"), path, query)
-
-
-def registered_domain(
-    host: Column | str, suffixes: list[str]
-) -> tuple[Column, Column]:
-    """(registered_domain, public_suffix) of a hostname under a
-    public-suffix list — longest-suffix-match with the PSL fallback
-    (unknown TLD ⇒ suffix = last label), as a PURE narrow expression: a
-    higher-order filter over the host's ≤k label-suffixes against the
-    suffix set inlined as an array literal. Zero joins, zero explode — the
-    politeness-grouping extraction stays inside whole-stage codegen even
-    at 10^10 URLs (the real PSL's ~9k rules still fit a literal/broadcast).
-
-    Politeness MUST group by registered domain, not host: `a.github.io`
-    and `b.github.io` are different registrants (private suffix) while
-    `www.x.co.uk` / `cdn.x.co.uk` are one site. Twinned in SQL by
-    plans/queries.py crawl_registered_domain."""
-    h = F.col(host) if isinstance(host, str) else host
-    psl = F.array(*[F.lit(s) for s in suffixes])
-    parts = F.split(h, r"\.")
-    np_ = F.size(parts)
-    i_hit = F.array_min(
-        F.filter(
-            F.sequence(F.lit(2), np_),
-            lambda i: F.array_contains(
-                psl, F.array_join(F.slice(parts, i, np_ - i + 1), ".")
-            ),
-        )
-    )
-    reg_start = F.coalesce(i_hit, np_) - 1
-    return (
-        F.array_join(F.slice(parts, reg_start, np_ - reg_start + 1), "."),
-        F.array_join(F.slice(parts, reg_start + 1, np_ - reg_start), "."),
-    )

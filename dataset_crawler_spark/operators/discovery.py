@@ -101,148 +101,3 @@ def expand_frontier(
         F.lit(DISCOVERED_SEED_RANK).cast("int").alias("seed_rank"),
         F.lit("pending").alias("state"),
     )
-
-
-def mine_dust_rules(
-    url_fps: DataFrame,
-    min_support: int = 5,
-    fp_group_cap: int = 6,
-    url_col: str = "url",
-    fp_col: str = "fp",
-) -> DataFrame:
-    """DUST rule mining — learn URL-alias rewrite rules from duplicate
-    content (Bar-Yossef, Keidar & Schonfeld, "Do Not Crawl in the DUST:
-    Different URLs with Similar Text", WWW 2007 / TWEB 2009, DustBuster's
-    rule-generation step).
-
-    ``url_fps``: (url, fp) — one row per crawled URL with its content
-    fingerprint (functions/hashing doc_fingerprint, or h60 of the text).
-    Two different URLs sharing a fingerprint are a DUST pair; each pair
-    votes for the substring substitution that maps one onto the other:
-    strip the longest common prefix and longest common suffix, and the
-    differing middles (α → β, ordered by url string order so every pair
-    votes consistently) form a candidate rule "replace α with β". Rules
-    are ranked by support (distinct pairs) and by how many distinct hosts
-    they generalize across — a rule seen on many hosts ("" → "/index.html",
-    "" → "www.") is a site-structure law worth adding to the canonicalizer;
-    a rule supported by one host's quirks is not. The crawler applies
-    high-support rules at frontier-ingest time so aliases collapse BEFORE
-    the fetch budget is spent (the reference has no alias handling at all —
-    its keys are endpoint-returned URIs taken verbatim,
-    CrawlOperations.java:715-827).
-
-    Scale shape (10^10 URLs): the pair generator joins on FINGERPRINT only
-    — never all URL pairs — and fingerprints shared by more than
-    ``fp_group_cap`` URLs (parked-domain templates, empty pages) are
-    dropped by the same doc-frequency cap that bounds every dedup join in
-    this engine, so a key yields ≤ cap·(cap−1)/2 pairs. The LCP/LCS per
-    pair is an O(len²) expression over ≤2 kB URL strings (bounded constant;
-    a binary-search LCP would be O(len·log len) but is not worth leaving
-    whole-stage codegen for). Rule aggregation is a map-side-combined hash
-    agg on ~tens-of-bytes keys.
-
-    Returns (rule_from, rule_to, support, n_hosts), support DESC-worthy.
-    """
-    u = F.col("_ua")
-    v = F.col("_ub")
-    a = url_fps.select(F.col(fp_col).alias("_fp"), F.col(url_col).alias("_ua"))
-    b = url_fps.select(F.col(fp_col).alias("_fp"), F.col(url_col).alias("_ub"))
-    ok = (
-        url_fps.groupBy(F.col(fp_col).alias("_fp"))
-        .agg(F.count_distinct(url_col).alias("_nh"))
-        .where((F.col("_nh") >= 2) & (F.col("_nh") <= fp_group_cap))
-        .select("_fp")
-    )
-    pairs = (
-        a.join(ok, "_fp").join(b, "_fp").where(u < v).select("_ua", "_ub")
-    ).distinct()
-    # longest common prefix / suffix via a codegen-side bounded scan:
-    # max k ∈ [0, min_len] with equal length-k prefixes (then suffixes of
-    # the remainder, capped so lcp + lcs ≤ min_len)
-    lcp = F.expr(
-        "array_max(filter(sequence(0, least(length(_ua), length(_ub))), "
-        "k -> substring(_ua, 1, k) = substring(_ub, 1, k)))"
-    )
-    lcs = F.expr(
-        "array_max(filter(sequence(0, least(length(_ua), length(_ub)) - _lcp), "
-        "k -> right(_ua, k) = right(_ub, k)))"
-    )
-    mids = (
-        pairs.withColumn("_lcp", lcp)
-        .withColumn("_lcs", lcs)
-        .select(
-            F.substring(u, F.col("_lcp") + 1, F.length(u) - F.col("_lcp") - F.col("_lcs"))
-            .alias("rule_from"),
-            F.substring(v, F.col("_lcp") + 1, F.length(v) - F.col("_lcp") - F.col("_lcs"))
-            .alias("rule_to"),
-            host_of(u).alias("_host"),
-        )
-    )
-    return (
-        mids.groupBy("rule_from", "rule_to")
-        .agg(
-            F.count("*").alias("support"),
-            F.count_distinct("_host").alias("n_hosts"),
-        )
-        .where(F.col("support") >= min_support)
-    )
-
-
-def apply_dust_rules(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    validate_against: DataFrame | None = None,
-) -> DataFrame:
-    """Collapse URL aliases with mined DUST rules (the application half of
-    :func:`mine_dust_rules` — DustBuster's "use the rules to canonicalize
-    the URL list" step, Bar-Yossef et al. TWEB 2009 §6).
-
-    Each rule rewrites its ``rule_to`` middle to ``rule_from`` — the
-    direction that maps an alias onto the lexicographically smaller form
-    the miner keyed pairs by — applied in support order (strongest law
-    first), one substitution per rule per URL. The result rides in a new
-    ``url_collapsed`` column; the caller dedups on it at frontier-ingest
-    time so aliases merge BEFORE fetch budget is spent.
-
-    ``validate_against``: optional (url) frame of known-good URLs (the seen
-    table, or the frontier itself). When given, a rewrite is kept only if
-    the rewritten URL actually exists there — the distributed stand-in for
-    DustBuster's fetch-and-compare validation, so an overreaching rule
-    (a middle that happens to appear in an unrelated URL) cannot invent
-    URLs that were never observed. Without it the rewrite is
-    unconditional (trusted-rules mode).
-
-    Scale shape: rules are a mined, support-thresholded DIMENSION (tens of
-    rows) — collected once and folded into a single codegen replace chain;
-    the URL column never shuffles. Validation adds one broadcast-friendly
-    left join keyed on the rewritten URL.
-    """
-    rs = [
-        (r["rule_from"], r["rule_to"])
-        for r in rules.select("rule_from", "rule_to", "support")
-        .orderBy(F.desc("support"), "rule_from", "rule_to")
-        .collect()
-        if r["rule_to"]  # a rule must have a non-empty middle to replace
-    ]
-    col = F.col(url_col)
-    for frm, to in rs:
-        col = F.replace(col, F.lit(to), F.lit(frm))
-    out = urls.withColumn("url_collapsed", col)
-    if validate_against is not None:
-        known = validate_against.select(
-            F.col(validate_against.columns[0]).alias("url_collapsed"),
-            F.lit(True).alias("_known"),
-        ).distinct()
-        out = (
-            out.join(known, "url_collapsed", "left")
-            .withColumn(
-                "url_collapsed",
-                F.when(
-                    F.col("_known") | (F.col("url_collapsed") == F.col(url_col)),
-                    F.col("url_collapsed"),
-                ).otherwise(F.col(url_col)),
-            )
-            .drop("_known")
-        )
-    return out

@@ -1,5 +1,5 @@
-"""Link-graph centrality: PageRank, TrustRank, HITS and OPIC over a
-host/source graph.
+"""Link-graph centrality: PageRank, TrustRank and OPIC over a host/source
+graph.
 
 Crawl schedulers prioritize by centrality — a frontier at 10^10 URLs cannot
 fetch everything each round, and host rank is the standard priority signal
@@ -11,27 +11,23 @@ share one execution shape here:
 - :func:`trustrank` — seed-biased teleport (Gyöngyi, Garcia-Molina &
   Pedersen, VLDB 2004), the spam-demotion variant: trust flows only out
   of vetted seeds, so unreachable link farms score exactly 0,
-- :func:`hits` — hubs & authorities (Kleinberg 1999, JACM 46(5)),
 - :func:`opic` — On-line Page Importance Computation (Abiteboul, Preda &
   Cobena, WWW 2003), the cash/history importance estimator designed
   specifically to PRIORITIZE A CRAWL FRONTIER while the crawl is running.
 
-Each is expressed as DataFrame joins so it scales exactly like the
-connected-components operator (operators/clustering.py): per iteration one
+Each is expressed as DataFrame joins: per iteration one
 hash-partitioned equi-join (edges ⋈ scores on src or dst) plus one hash
 aggregate (sum of contributions per endpoint) — no all-pairs product, no
 driver-side graph.
 
 Determinism contract: fixed ``n_iter`` (no convergence-dependent stop), no
-RNG, sums of doubles rounded by the caller before comparison — the DuckDB
-twin unrolls the same ``n_iter`` iterations as chained CTEs and matches to
-6 decimals; the pure-Python twin in tests/test_pipeline_ops.py is an
-independent power iteration.
+RNG, sums of doubles rounded by the caller before comparison; the
+pure-Python twins in tests/test_graph.py are independent power iterations.
 
 Dangling nodes (no out-edges) leak rank mass; the standard fix is uniform
 redistribution. The dangling mass is ONE scalar aggregate per iteration — a
-filter+sum over a precomputed ``has_out`` flag, a control-plane action like
-the CC convergence check, not data movement. Lineage is cut per iteration
+filter+sum over a precomputed ``has_out`` flag, a control-plane scalar,
+not data movement. Lineage is cut per iteration
 with non-eager ``localCheckpoint`` (the dangling-mass aggregate is the
 action that materializes it), so the loop's plan does not grow.
 
@@ -82,7 +78,7 @@ def _prepare_graph(
     nodes: DataFrame | None,
     broadcast_threshold: int,
 ) -> _PreparedGraph:
-    """Shared static-side setup for pagerank/hits/opic (see pagerank's
+    """Shared static-side setup for pagerank/trustrank/opic (see pagerank's
     docstring for the physical-strategy rationale; the inline comments
     below are load-bearing measurements)."""
     e = edges.select("src", "dst").distinct()
@@ -158,9 +154,7 @@ def pagerank(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     n_iter: int = 8,
-    damping: float = DAMPING,
     broadcast_threshold: int = 100_000,
-    init: DataFrame | None = None,
 ) -> DataFrame:
     """(node, rank) after ``n_iter`` damped power iterations.
 
@@ -168,19 +162,8 @@ def pagerank(
     deduped here). ``nodes``: optional (node) universe; isolated nodes get
     teleport-only rank; defaults to nodes appearing in ``edges``.
 
-    ``init``: optional (node, rank) WARM START — the incremental-crawl
-    path: ranks from the previous round seed this round's iteration, so a
-    frontier whose link graph grows by |new edges| per round needs only a
-    few refresh iterations to re-converge instead of a cold power iteration
-    over the whole graph (power iteration contracts toward the unique
-    fixpoint from ANY start, so warm starting changes the iterate sequence,
-    never the limit). Nodes missing from ``init`` (newly discovered) start
-    at the uniform 1/n; the vector is NOT renormalized — after one
-    iteration the update re-injects the correct teleport + dangling mass
-    exactly as the twin algebra does.
-
     Physical strategy is size-aware (same values either way — pinned by
-    tests/test_pipeline_ops.py): at or below ``broadcast_threshold`` nodes
+    tests/test_graph.py): at or below ``broadcast_threshold`` nodes
     the per-iteration ranks/contrib sides ride BROADCAST joins (a host graph
     is thousands of rows — pre-partitioning the static sides costs two
     exchange+cache materializations that dwarf the tiny joins they save);
@@ -203,19 +186,9 @@ def pagerank(
     # it, so lineage is still cut per iteration.
     has_dangling = g.has_dangling
 
-    if init is None:
-        ranks = nodes.select("node", "has_out", (F.lit(1.0) / n).alias("rank"))
-    else:
-        i0 = init.select(
-            F.col(init.columns[0]).alias("node"),
-            F.col(init.columns[1]).alias("_ir"),
-        )
-        ranks = nodes.join(F.broadcast(i0) if small else i0, "node", "left").select(
-            "node",
-            "has_out",
-            F.coalesce("_ir", F.lit(1.0) / n).alias("rank"),
-        )
-    ranks = ranks.localCheckpoint(eager=False)
+    ranks = nodes.select(
+        "node", "has_out", (F.lit(1.0) / n).alias("rank")
+    ).localCheckpoint(eager=False)
     for _ in range(n_iter):
         rhs = F.broadcast(ranks) if small else ranks
         contrib = (
@@ -236,17 +209,17 @@ def pagerank(
         ranks = joined.select(
             "node",
             "has_out",
-            # per-iteration 9-dp quantization (round-5 determinism): the
-            # dangling-mass scalar and contribution aggregates are float
-            # sums whose last ulp depends on accumulation order; rounding
-            # the iterate resets that sub-ulp drift far below the 9-dp grid
-            # each round, so Spark and the SQL twin (same ROUND in
-            # _pagerank_sql / _incr_pagerank_sql) compute bit-identical
-            # rank sequences at any partitioning. The 1e-9 perturbation is
-            # three orders below the hashed 6-dp output round.
+            # per-iteration 9-dp quantization: the dangling-mass scalar and
+            # contribution aggregates are float sums whose last ulp depends
+            # on accumulation order; rounding the iterate each round snaps
+            # that sub-ulp drift back onto the 9-dp grid, which reduces the
+            # probability that two partitionings disagree below observable
+            # (an iterate sitting within the drift band of a grid boundary
+            # can still round differently). The 1e-9 perturbation is three
+            # orders below a 6-dp output round.
             F.round(
-                F.lit(1.0 - damping) / n
-                + damping * (F.coalesce("contrib", F.lit(0.0)) + mass / n),
+                F.lit(1.0 - DAMPING) / n
+                + DAMPING * (F.coalesce("contrib", F.lit(0.0)) + mass / n),
                 9,
             ).alias("rank"),
         ).localCheckpoint(eager=False)
@@ -263,7 +236,6 @@ def trustrank(
     trusted: DataFrame,
     nodes: DataFrame | None = None,
     n_iter: int = 8,
-    damping: float = DAMPING,
     broadcast_threshold: int = 100_000,
 ) -> DataFrame:
     """(node, trust) after ``n_iter`` biased power iterations — TrustRank
@@ -330,71 +302,12 @@ def trustrank(
             "has_out",
             "tel",
             (
-                F.lit(1.0 - damping) * F.col("tel")
-                + damping
+                F.lit(1.0 - DAMPING) * F.col("tel")
+                + DAMPING
                 * (F.coalesce("contrib", F.lit(0.0)) + mass * F.col("tel"))
             ).alias("rank"),
         ).localCheckpoint(eager=False)
     out = ranks.select("node", F.col("rank").alias("trust")).localCheckpoint()
-    g.release()
-    return out
-
-
-def hits(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    n_iter: int = 8,
-    broadcast_threshold: int = 100_000,
-) -> DataFrame:
-    """(node, authority, hub) after ``n_iter`` HITS iterations
-    (Kleinberg 1999): each iteration sets authority(v) = Σ hub(u) over
-    in-edges (u,v) then hub(u) = Σ authority(v) over out-edges (u,v), each
-    L1-normalized so the scores form a distribution (the normalization
-    choice only rescales Kleinberg's L2 fixpoint — the ranking is
-    identical — and keeps the in-plan scalar a plain SUM both here and in
-    the DuckDB twin). Nodes without in-edges get authority 0; without
-    out-edges, hub 0.
-
-    Same execution contract as :func:`pagerank`: fixed iteration count, no
-    RNG; per half-step one equi-join + one hash aggregate, the L1 norm an
-    in-plan 1-row broadcast aggregate; lineage cut per iteration with
-    non-eager localCheckpoint; static sides broadcast below
-    ``broadcast_threshold`` nodes, repartition(key).cache() above it.
-    """
-    g = _prepare_graph(edges, nodes, broadcast_threshold)
-    ew, nds, small = g.ew, g.nodes, g.small
-
-    def _spread(scores: DataFrame, col: str, from_col: str, to_col: str) -> DataFrame:
-        """One HITS half-step: push ``col`` across edges from ``from_col``
-        endpoints onto ``to_col`` endpoints, L1-normalize in-plan."""
-        rhs = F.broadcast(scores) if small else scores
-        raw = (
-            ew.join(rhs, F.col(from_col) == F.col("node"), "inner")
-            .groupBy(to_col)
-            .agg(F.sum(col).alias("_v"))
-            .withColumnRenamed(to_col, "node")
-        )
-        tot = raw.agg(F.coalesce(F.sum("_v"), F.lit(0.0)).alias("_t"))
-        out = (
-            nds.join(F.broadcast(raw) if small else raw, "node", "left")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "node",
-                (
-                    F.coalesce(F.col("_v"), F.lit(0.0))
-                    / F.when(F.col("_t") > 0, F.col("_t")).otherwise(F.lit(1.0))
-                ).alias(col),
-            )
-        )
-        return out.localCheckpoint(eager=False)
-
-    init = F.lit(1.0) / g.n
-    auth = nds.select("node", init.alias("authority")).localCheckpoint(eager=False)
-    hub = nds.select("node", init.alias("hub")).localCheckpoint(eager=False)
-    for _ in range(n_iter):
-        auth = _spread(hub.withColumnRenamed("hub", "authority"), "authority", "src", "dst")
-        hub = _spread(auth.withColumnRenamed("authority", "hub"), "hub", "dst", "src")
-    out = auth.join(hub, "node").select("node", "authority", "hub").localCheckpoint()
     g.release()
     return out
 
@@ -404,10 +317,8 @@ def opic_step(state: DataFrame, edges: DataFrame, fetched: DataFrame) -> DataFra
     the schedule the paper actually proposes: only the pages FETCHED this
     round bank their cash into history and distribute it over their
     out-links; everyone else's cash just sits). This is the incremental
-    form of :func:`opic` for a standing per-round state, the same
-    batch→incremental move as the minhash/signlsh/substring/CC index family:
-    per crawl round the cost is ∝ |fetched| joins, never a full-graph
-    iteration.
+    form of :func:`opic` for a standing per-round state: per crawl round
+    the cost is ∝ |fetched| joins, never a full-graph iteration.
 
         hist'(u) = hist(u) + cash(u)                       u ∈ fetched
         cash'(v) = [v ∉ fetched]·cash(v)
@@ -546,469 +457,3 @@ def opic(
     ).localCheckpoint()
     g.release()
     return out
-
-
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle counts + degree over an UNDIRECTED simple graph,
-    by degree orientation (Schank & Wagner 2005; Suri & Vassilvitskii,
-    WWW 2011 — the MapReduce formulation this DataFrame plan mirrors).
-
-    ``edges`` is any (src, dst) pair list; it is normalized to distinct
-    undirected pairs first, so direction, duplicates, and self-loops in the
-    input are all harmless. Triangles are the standard link-farm /
-    tight-knit-community signal on a host graph: spam clusters show
-    clustering coefficients near 1 while organic hub neighborhoods stay
-    sparse (complements graph_spam_mass's trust-gap view).
-
-    Shape (100 TB): orient each edge from its (degree, id)-smaller endpoint
-    to the larger — every triangle then has exactly ONE wedge rooted at its
-    (degree, id)-minimum vertex, so each triangle is found exactly once and
-    the wedge self-join fans out by oriented OUT-degree, which degree
-    orientation bounds at O(sqrt(m)) per node: O(m^1.5) candidate wedges
-    total instead of quadratic hub fan-out. Three hash-partitioned
-    equi-joins + two aggregates, all integer arithmetic — no float
-    accumulation anywhere, so results are bitwise deterministic.
-
-    Returns (node, degree, triangles) for every node with degree ≥ 1.
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # deg feeds the orientation build AND the final per-node join; orient
-    # feeds BOTH wedge sides and the closing join. Without a lineage cut the
-    # optimizer re-derives each consumer from the source scan (measured: 34
-    # parquet scans, 0 reused exchanges at fixture scale) — non-eager
-    # localCheckpoint materializes each exactly once and the three
-    # consumers share the blocks (GC-reclaimable, no unpersist contract on
-    # the caller).
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-        .localCheckpoint(eager=False)
-    )
-    da, db = deg.alias("da"), deg.alias("db")
-    u = und.alias("u")
-    a_first = F.struct(F.col("da.degree"), F.col("u.a")) < F.struct(
-        F.col("db.degree"), F.col("u.b")
-    )
-    orient = (
-        u.join(da, F.col("da.node") == F.col("u.a"))
-        .join(db, F.col("db.node") == F.col("u.b"))
-        .select(
-            F.when(a_first, F.col("u.a")).otherwise(F.col("u.b")).alias("lo"),
-            F.when(a_first, F.col("u.b")).otherwise(F.col("u.a")).alias("hi"),
-            F.when(a_first, F.col("db.degree"))
-            .otherwise(F.col("da.degree"))
-            .alias("deg_hi"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    e1, e2 = orient.alias("e1"), orient.alias("e2")
-    wedge = e1.join(e2, F.col("e1.lo") == F.col("e2.lo")).where(
-        F.struct(F.col("e1.deg_hi"), F.col("e1.hi"))
-        < F.struct(F.col("e2.deg_hi"), F.col("e2.hi"))
-    ).select(
-        F.col("e1.lo").alias("u"),
-        F.col("e1.hi").alias("v"),
-        F.col("e2.hi").alias("w"),
-    )
-    tri = wedge.join(
-        orient.select(F.col("lo").alias("v"), F.col("hi").alias("w")), ["v", "w"]
-    )
-    per_node = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("triangles"))
-    )
-    return deg.join(per_node, "node", "left").select(
-        "node",
-        "degree",
-        F.coalesce("triangles", F.lit(0).cast("long")).alias("triangles"),
-    )
-
-
-def kcore(edges: DataFrame, k: int, n_iter: int = 8) -> DataFrame:
-    """Nodes of the k-core of an UNDIRECTED simple graph (the maximal
-    subgraph where every node keeps degree ≥ k), with each survivor's
-    degree INSIDE the core — iterative peeling (Matula & Beck 1983; the
-    distributed round formulation of Montresor, De Pellegrini & Miorandi,
-    IEEE TPDS 2013).
-
-    The k-core is the standard dense-subgraph signal on a link graph:
-    link farms and tight mirror rings survive high-k peels that organic
-    long-tail pages do not (complements triangle_counts' closed-wedge view
-    and graph_spam_mass's trust-gap view), and core number is a cheap
-    frontier-priority / spam-demotion feature.
-
-    ``edges``: any (src, dst) pair list — normalized to distinct
-    undirected pairs (direction, duplicates, self-loops all harmless),
-    then expanded to both orientations so per-node degree is ONE groupBy
-    on src.
-
-    Shape (100 TB): each peel round is ONE map-side-combinable hash
-    aggregate (degree per node over surviving edges) + a HAVING filter +
-    TWO semi-joins (keep edges whose src AND dst survive) — all
-    hash-partitioned on the node key, all integer arithmetic (bitwise
-    deterministic, no float anywhere). The edge set shrinks monotonically,
-    so later rounds cost less; lineage is cut per round with non-eager
-    localCheckpoint exactly like the pagerank/CC loops so the plan does
-    not grow. Fixed ``n_iter`` (determinism contract — the DuckDB twin
-    unrolls the same rounds); convergence at fixture scale is pinned by a
-    fixpoint test, and extra rounds past the fixpoint are no-ops on
-    already-peeled state, not value changes.
-
-    Returns (node, core_degree) for k-core members only (empty frame if
-    the k-core is empty).
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(n_iter):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("src")
-            .localCheckpoint(eager=False)
-        )
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
-    return e.groupBy("src").agg(F.count("*").alias("core_degree")).select(
-        F.col("src").alias("node"), "core_degree"
-    )
-
-
-def hyperball(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    n_iter: int = 4,
-    p: int | None = None,
-) -> DataFrame:
-    """HyperBall (Boldi & Vigna, "In-Core Computation of Geometric
-    Centralities with HyperBall", ICDMW 2013): the per-node neighborhood
-    function N(v, t) = |{u : d(v, u) ≤ t}| estimated with one HyperLogLog
-    sketch per node, grown one hop per round. THE web-scale answer to
-    geometric centralities (harmonic/closeness) and effective diameter —
-    exact per-node ball sizes need all-pairs BFS (O(n·m), hopeless at
-    10^10 nodes), while HyperBall keeps a FIXED 2^p-register summary per
-    node whose one-hop growth is ``union + elementwise MAX``: exactly the
-    merge algebra of operators/sketches.py, so each round is ONE
-    edges⋈registers equi-join + ONE map-side-combinable hash aggregate,
-    both partitioned on the node key. Rows per round are capped at
-    n_nodes × 2^p regardless of ball volume — the ball SIZES explode
-    exponentially with t, the sketches never do.
-
-    Balls grow along OUT-edges: round t adds every register set reachable
-    through one more hop, so N(v, t) counts nodes REACHABLE FROM v. For
-    harmonic centrality (Σ 1/d(u→v) over nodes that can REACH v — the
-    crawl-priority direction) pass the TRANSPOSED edge list; the registered
-    query graph_doc_harmonic does.
-
-    Determinism contract: node identity is hashed with the suite's h60
-    (sketch value ``'nb|' || node``), register/rank/estimate algebra is the
-    sketches.py exact-integer form (sum of 2^(53-rho) as BIGINT, one IEEE
-    division), and the round count is FIXED — the DuckDB twin unrolls the
-    identical rounds as MATERIALIZED CTEs and matches value-hash-exact.
-    Registers after round t equal the plain HLL sketch of the EXACT t-ball
-    (pinned by tests/test_pipeline_ops.py::
-    test_hyperball_registers_equal_exact_ball_sketch) because max-merge along edges commutes with set
-    union.
-
-    ``edges``: directed (src, dst); duplicates and self-loops are
-    normalized away. ``nodes``: optional (node) universe — isolated nodes
-    keep their self-only ball; defaults to endpoints of ``edges``.
-
-    Returns the LONG-FORM neighborhood table (node, t, hll_s, v_empty,
-    nf_estimate) for t ∈ [0, n_iter], one row per node per round; callers
-    pivot fixed t values into columns (never aggregate the doubles — the
-    pivot keeps harmonic sums in fixed expression order, the
-    mix_source_token_shares determinism lesson).
-    """
-    from dataset_crawler_spark.functions.hashing import h60
-    from dataset_crawler_spark.operators.sketches import (
-        _H_BITS,
-        HLL_P,
-        hll_estimate,
-        hll_rho,
-    )
-
-    if p is None:
-        p = HLL_P
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    if nodes is None:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-    h = h60(F.concat(F.lit("nb|"), F.col("node").cast("string")))
-    cur = nodes.select(
-        "node",
-        h.bitwiseAND(F.lit((1 << p) - 1)).alias("bucket"),
-        hll_rho(F.shiftright(h, p), _H_BITS - p).alias("max_rho"),
-    ).localCheckpoint(eager=False)
-
-    def snap(regs: DataFrame, t: int) -> DataFrame:
-        return hll_estimate(regs, ["node"], p).select(
-            "node",
-            F.lit(t).alias("t"),
-            "hll_s",
-            "v_empty",
-            F.col("hll_estimate").alias("nf_estimate"),
-        )
-
-    out = snap(cur, 0)
-    for t in range(1, n_iter + 1):
-        prop = e.join(
-            cur.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), "bucket", "max_rho")
-        cur = (
-            cur.unionByName(prop)
-            .groupBy("node", "bucket")
-            .agg(F.max("max_rho").alias("max_rho"))
-            .localCheckpoint(eager=False)
-        )
-        out = out.unionByName(snap(cur, t))
-    return out
-
-
-def resolve_redirects(redirects: DataFrame, n_doublings: int = 6) -> DataFrame:
-    """Resolve redirect CHAINS to their terminal targets by pointer
-    doubling — the frontier-ingest step that collapses 3xx hops (and the
-    DUST aliases crawl_dust_rules mines) onto the one URL worth fetching,
-    so chain members never occupy frontier slots. The reference follows
-    redirects implicitly one hop at a time inside its fetch loop
-    (DataCrawler.java's per-URL connection handling); at 10^10 URLs the
-    chain walk has to happen as a set operation BEFORE scheduling, not
-    per-fetch.
-
-    ``redirects``: (node, next) — a redirect MAP, at most one out-pointer
-    per node (a functional graph). Terminal = any target that is not
-    itself a redirect source.
-
-    Pointer doubling (the pointer-jumping half of the CC operator,
-    operators/clustering.py): each round every unresolved node's pointer
-    jumps to its pointer's pointer and the hop DISTANCE adds, so after k
-    rounds every chain of length ≤ 2**k is resolved — log-diameter rounds,
-    one hash equi-join per round, integer-only algebra (bitwise
-    deterministic; the DuckDB twin unrolls the identical rounds).
-
-    A chain that never leaves the redirect set within 2**n_doublings hops
-    is a redirect CYCLE (or an over-long chain — real crawlers cap chains
-    far below 64; RFC 9110 permits rejecting after a small fixed bound):
-    those resolve to the (-1, -1) sentinel and the scheduler drops them,
-    the set-operation form of "too many redirects".
-
-    Returns (node, terminal, chain_len); terminal/chain_len = -1 for
-    cycles. Chain members resolve to the SAME terminal, so downstream
-    dedup is a plain groupBy on terminal.
-
-    Work shape: resolved rows split OUT of the probe side the round they
-    finish — a row whose pointer reached a terminal is a fixpoint of the
-    doubling step, so carrying it through later joins (as the unrolled SQL
-    twin does, and the oracle gate proves equivalent) only re-shuffles
-    dead weight. With hash-uniform targets the pending side shrinks
-    doubly-exponentially (fraction unresolved after round r ≈ p^(2^r) for
-    redirect density p), so late rounds probe a near-empty side; the
-    lookup (build) side stays the full map, which is what lets a pending
-    node hook onto an already-resolved one and inherit its terminal +
-    distance in one jump.
-    """
-    srcs = redirects.select(F.col("node").alias("next")).distinct()
-    init = (
-        redirects.join(srcs.withColumn("_is_src", F.lit(True)), "next", "left")
-        .select(
-            "node",
-            "next",
-            F.lit(1).cast("long").alias("dist"),
-            F.col("_is_src").isNull().alias("done"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    resolved = init.where(F.col("done"))
-    pending = init.where(~F.col("done")).localCheckpoint(eager=False)
-    state = init
-    for _ in range(n_doublings):
-        a, b = pending.alias("a"), state.alias("b")
-        upd = (
-            a.join(b, F.col("a.next") == F.col("b.node"), "left")
-            .select(
-                F.col("a.node").alias("node"),
-                F.col("b.next").alias("next"),
-                (F.col("a.dist") + F.col("b.dist")).alias("dist"),
-                F.col("b.done").alias("done"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        resolved = resolved.unionByName(upd.where(F.col("done")))
-        pending = upd.where(~F.col("done")).localCheckpoint(eager=False)
-        state = resolved.unionByName(pending)
-    return resolved.select(
-        "node", F.col("next").alias("terminal"), F.col("dist").alias("chain_len")
-    ).unionByName(
-        pending.select(
-            "node",
-            F.lit(-1).cast("long").alias("terminal"),
-            F.lit(-1).cast("long").alias("chain_len"),
-        )
-    )
-
-
-def bfs_depths(edges: DataFrame, seeds: DataFrame, n_iter: int = 8) -> DataFrame:
-    """Multi-source BFS: hop distance from the nearest seed for every node
-    reachable within ``n_iter`` hops — THE breadth-first crawl-order
-    signal (Najork & Wiener, WWW 2001: BFS from good seeds finds
-    high-quality pages early), and the depth cap every production crawler
-    enforces per host. The reference's frontier has no notion of depth
-    (its work queue is a flat per-type list); at web scale depth-from-seed
-    is a frontier priority axis next to OPIC/centrality.
-
-    Frontier-delta formulation (the set-operation form of Pregel SSSP with
-    unit weights): each round expands ONLY the nodes settled last round —
-    one equi-join frontier⋈edges, one distinct, one anti-join against the
-    settled set — so every node is expanded exactly once regardless of
-    ``n_iter``, and rounds past the true eccentricity are no-ops on empty
-    frontiers. Integer-only: the value hash cannot flake.
-
-    ``seeds``: (node) frame; ``edges``: directed (src, dst).
-    Returns (node, depth) for REACHED nodes only — callers left-join and
-    coalesce to a sentinel for the unreached tail.
-    """
-    settled = seeds.select("node", F.lit(0).cast("long").alias("depth"))
-    frontier = settled.select("node").localCheckpoint(eager=False)
-    settled = settled.localCheckpoint(eager=False)
-    e = edges.select("src", "dst")
-    for r in range(1, n_iter + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(settled.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        settled = settled.unionByName(
-            nxt.select("node", F.lit(r).cast("long").alias("depth"))
-        ).localCheckpoint(eager=False)
-        frontier = nxt
-    return settled
-
-
-def label_propagation(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    n_iter: int = 4,
-    init: DataFrame | None = None,
-) -> DataFrame:
-    """Community detection by synchronous label propagation (Raghavan,
-    Albert & Kumara, Phys. Rev. E 2007), made deterministic: every node
-    starts labeled with itself; each round every node adopts the label
-    that is most frequent among its neighbors, ties broken by MINIMUM
-    label, isolated nodes keeping their current label. Fixed ``n_iter``
-    synchronous rounds (the semi-synchronous variant of Cordasco &
-    Gargano, BASNA 2010 — asynchronous LPA's update order is
-    partition-dependent, which a cross-engine value-hash cannot allow).
-
-    Communities are the density signal the connectivity operators miss:
-    connected_components (clustering.py) answers "reachable at all" —
-    one bridge edge merges two mirror farms into one component — while
-    LPA's frequency vote keeps densely-linked host/doc neighborhoods
-    (mirror rings, template families, link farms) separate unless the
-    bridge outvotes them. Complements kcore (dense-subgraph membership)
-    and triangle_counts (local clustering) with an actual partition.
-
-    ``edges``: any (src, dst) pair list — normalized to distinct
-    undirected pairs then expanded to both orientations, exactly like
-    ``kcore``. ``nodes``: optional (node) universe for isolated nodes.
-    ``init``: optional (node, community) standing labels to warm-start
-    from — the incremental-refresh mode (engine_incremental_lpa folds a
-    new round's edges into last round's communities at refresh-round
-    cost instead of re-converging from singletons); universe nodes
-    missing from ``init`` start as their own label, exactly like a cold
-    start.
-
-    Shape (100 TB): per round ONE equi-join of the edge list with the
-    label table (both hash-partitioned on the node key) + ONE two-key
-    hash aggregate (node,label count, map-side combinable) + ONE arg-min
-    struct aggregate per node — no window function, no driver-side
-    iteration, no RNG. Lineage cut per round with non-eager
-    localCheckpoint like the pagerank/CC/kcore loops.
-
-    Returns (node, community) — community = the winning label (a node id).
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    if nodes is None:
-        nodes = e.select(F.col("src").alias("node")).distinct()
-    else:
-        nodes = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-    if init is None:
-        labels = nodes.select("node", F.col("node").alias("community"))
-    else:
-        seed = init.select(
-            F.col(init.columns[0]).alias("node"),
-            F.col(init.columns[1]).alias("_init"),
-        )
-        labels = (
-            nodes.join(seed, "node", "left")
-            .select("node", F.coalesce("_init", F.col("node")).alias("community"))
-        )
-    labels = labels.localCheckpoint(eager=False)
-    for _ in range(n_iter):
-        votes = (
-            e.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"), "community")
-            .agg(F.count("*").alias("cnt"))
-        )
-        # arg-max count with min-label tie-break as ONE struct min:
-        # (-cnt, label) ascending == (cnt desc, label asc)
-        best = (
-            votes.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("_nc"), F.col("community").alias("_l")
-                    )
-                ).alias("_b")
-            )
-            .select("node", F.col("_b._l").alias("_new"))
-        )
-        labels = (
-            labels.join(best, "node", "left")
-            .select("node", F.coalesce("_new", "community").alias("community"))
-            .localCheckpoint(eager=False)
-        )
-    return labels

@@ -39,59 +39,11 @@ from dataset_crawler_spark.operators import seen as SN
 DEFAULT_N_SALT = 16
 
 
-def canonical_candidates(frontier: DataFrame) -> DataFrame:
-    """Canonicalize + dedup one round's pending frontier.
-
-    Duplicate canonical URLs collapse to (min seed_rank, max priority) — both
-    deterministic aggregates, so dedup order never matters.
-    """
-    cand = (
-        frontier.where(F.col("state") == "pending")
-        .withColumn("url_c", canonicalize_url(F.col("url")))
-        .groupBy("url_c")
-        .agg(
-            F.min("seed_rank").alias("seed_rank"),
-            F.max("priority").alias("priority"),
-            F.min("discovered_crawl_id").alias("discovered_crawl_id"),
-        )
-        .withColumn("host", host_of("url_c"))
-    )
-    return cand
-
-
 #: filters whose total bitset fits comfortably on every executor are probed
 #: broadcast-side (one Arrow pass, no candidate shuffle); larger filters use
 #: the cogroup path where each shard stays on one node. 512 MB ≈ 4·10^8 URLs
 #: @1% FP per executor — beyond that, shard-local probing wins.
 BLOOM_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    bloom_state: DataFrame | None,
-    bloom_params: SN.BloomParams | None,
-    seen_urls: DataFrame | None,
-    probe_strategy: str = "auto",
-) -> DataFrame:
-    """Exact unseen filter with Bloom fast path.
-
-    ``seen_urls``: (url_c) exact table of fetched URLs. Bloom-negative rows
-    pass immediately (zero false negatives ⇒ provably unseen); bloom-positive
-    rows are confirmed by anti-join against the exact table.
-
-    ``probe_strategy``: ``broadcast`` (whole filter to every executor, no
-    candidate shuffle), ``cogroup`` (shuffle candidates by shard — the
-    10^10-URL path), or ``auto`` (by total filter size vs
-    :data:`BLOOM_BROADCAST_MAX_BYTES`).
-    """
-    if bloom_state is None or bloom_params is None:
-        if seen_urls is None:
-            return candidates
-        return candidates.join(
-            seen_urls.select(F.col("url_c")).hint("SHUFFLE_HASH"), "url_c", "left_anti"
-        )
-    probed = _probe_filter(candidates, bloom_state, bloom_params, probe_strategy)
-    return _confirm_unseen(probed, seen_urls)
 
 
 def _probe_filter(
@@ -360,11 +312,13 @@ def centrality_host_budgets(
     all-zero signal must not zero the whole crawl.
 
     Determinism: the multiplier is quantized to 4 decimals before the floor
-    (suite convention), so last-ulp variance in the distributed Σscore
-    cannot flip a budget. Scale shape: ONE 1-row aggregate broadcast onto
-    the dim (no global sort/window — at 10^8 hosts a rank-based scheme
-    would need a single-partition row_number; the share-based rule stays
-    embarrassingly parallel), scores dimension-sized and broadcast like
+    (suite convention), which reduces the probability that last-ulp variance
+    in the distributed Σscore flips a budget below observable (a multiplier
+    within that variance of a 4-dp boundary can still round differently).
+    Scale shape: ONE 1-row aggregate broadcast onto the dim (no global
+    sort/window — at 10^8 hosts a rank-based scheme would need a
+    single-partition row_number; the share-based rule stays embarrassingly
+    parallel), scores dimension-sized and broadcast like
     adaptive_host_budgets' stats.
     """
     s = scores.select(

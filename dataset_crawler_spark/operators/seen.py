@@ -11,13 +11,13 @@ probabilistic filters that scale to a 10^10-URL frontier:
   ``applyInPandas`` (one Arrow batch per shard → numpy bit ops, no per-row
   Python).
 - probing has two physical strategies:
-  * ``probe_broadcast`` — collect the shard bitsets (m bits each) and
-    broadcast; a ``mapInPandas`` checks candidates vectorized. Right when the
-    filter fits on executors (≤ a few GB).
-  * ``probe_cogroup`` — the scale path: candidates and shard states cogrouped
-    on ``shard`` (``groupBy().cogroup().applyInPandas``) so no single node
-    ever holds the whole filter; at 10^10 URLs @1% FP (~12 GB of bitset) each
-    of e.g. 1024 shards is ~12 MB.
+  * ``bloom_probe_scalar`` — collect the shard bitsets (m bits each) and
+    broadcast; a scalar Arrow UDF checks the 64-bit hashes vectorized. Right
+    when the filter fits on executors (≤ a few GB).
+  * ``bloom_probe_cogroup`` — the scale path: candidates and shard states
+    cogrouped on ``shard`` (``groupBy().cogroup().applyInPandas``) so no
+    single node ever holds the whole filter; at 10^10 URLs @1% FP (~12 GB of
+    bitset) each of e.g. 1024 shards is ~12 MB.
 
 Bloom guarantees zero false negatives; FP rate ε is set by sizing
 (m = -n·lnε/ln²2, k = m/n·ln2). The cuckoo filter adds deletion — needed when
@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BLOOM_STATE_SCHEMA = "shard int, n_bits long, n_hashes int, bits binary"
@@ -120,38 +120,6 @@ def _bloom_check_np(h: np.ndarray, bits: np.ndarray, n_bits: int, n_hashes: int)
     byte = bits[pos >> 3]
     mask = np.uint8(1) << (pos & 7).astype(np.uint8)
     return ((byte & mask) != 0).all(axis=1)
-
-
-def bloom_probe_broadcast(
-    candidates: DataFrame, url_col: str, state: DataFrame, params: BloomParams
-) -> DataFrame:
-    """candidates + boolean ``seen`` column; filter state broadcast to executors."""
-    spark = candidates.sparkSession
-    shard_map = {r["shard"]: np.frombuffer(r["bits"], dtype=np.uint8) for r in state.collect()}
-    bc = spark.sparkContext.broadcast(shard_map)
-    n_bits, n_hashes, n_shards = params.n_bits_per_shard, params.n_hashes, params.n_shards
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + f", {_PROBE_SCHEMA_SUFFIX}"
-
-    def probe(it):
-        for pdf in it:
-            hv = pdf["_h"].to_numpy(np.uint64)
-            shards = pdf["_shard"].to_numpy()
-            seen = np.zeros(len(pdf), dtype=bool)
-            for s in np.unique(shards):
-                m = shards == s
-                bits = bc.value.get(int(s))
-                if bits is not None:
-                    seen[m] = _bloom_check_np(hv[m], bits, n_bits, n_hashes)
-            res = pdf.drop(columns=["_h", "_shard"])
-            res["seen"] = seen
-            yield res
-
-    hashed = candidates.withColumn("_h", F.xxhash64(F.col(url_col))).withColumn(
-        "_shard", F.pmod(F.col("_h"), F.lit(n_shards)).cast("int")
-    )
-    return hashed.mapInPandas(probe, out_schema)
 
 
 def bloom_probe_scalar(

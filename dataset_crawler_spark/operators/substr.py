@@ -1,8 +1,6 @@
-"""Exact-substring dedup core (Lee et al. 2022, "Deduplicating Training
-Data Makes Language Models Better", ExactSubstr) — the shared implementation
-behind the batch queries (`dedup_substring_exact`, `dedup_substring_removal`),
-the incremental per-round index (`engine_incremental_substr`), and the
-export sink's optional removal gate (CLI ``export-shards --dedup-substring``).
+"""Exact-substring dedup (Lee et al. 2022, "Deduplicating Training Data
+Makes Language Models Better", ExactSubstr) — the export sink's optional
+removal gate (CLI ``export-shards --dedup-substring``).
 
 Pipeline pieces (each a narrow DataFrame stage — text never shuffles; every
 exchanged row is ~24-byte ``(h, doc_id, i)`` longs):
@@ -14,55 +12,31 @@ exchanged row is ~24-byte ``(h, doc_id, i)`` longs):
                        maximal disjoint [s, e) dup spans per document
   cut_spans            Lee et al. §4 removal: cut the spans out of the token
                        stream and rebuild the cleaned text per document
-  incremental_dup_starts
-                       per-round marking against a standing window-hash
-                       index: new docs probe index + new×new, so a crawl
-                       round costs |new windows|, never |corpus|
-
-Incremental equivalence contract: with winners elected in INGESTION order
-(round, then (doc_id, i)), the union of per-round span outputs over all
-rounds equals the batch span set under that same total order — a new window
-whose hash exists in the index is always a non-winner (every index entry is
-earlier), and within-round collisions elect the same winner batch would.
-`engine_incremental_substr` (plans/queries.py) value-hash-checks this
-against a batch DuckDB twin ordered by (round, doc_id, i).
 
 Reference-semantics anchor: the diff core's span ops
 (CrawlOperations.java:507-593) give the engine its span vocabulary; this
 operator applies it to dedup (spans here are token ranges, not DOM spans).
 
-Scale notes (100 TB): the standing index is one row per token position —
-linear in corpus size, hash-partitioned by ``h`` (SnapshotStore/Iceberg
-``bucket(h)``), so the per-round semi-join is bucket-local. The honest cost
-vs stride-k chunking is k× more hashed rows — the price of the
-alignment-free guarantee (Lee et al. pay the same blowup in suffix-array
-space). Measured at 1M docs / 100k planted copies: 11.8 s @32c, 2→8
-scaling efficiency 0.94 (tools/substr_scale_probe.py).
+Scale notes (100 TB): the window table is one row per token position —
+linear in corpus size, hash-partitioned by ``h``. The honest cost vs
+stride-k chunking is k× more hashed rows — the price of the alignment-free
+guarantee (Lee et al. pay the same blowup in suffix-array space). Measured
+at 1M docs / 100k planted copies: 11.8 s @32c, 2→8 scaling efficiency 0.94.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _default_hash(c: Column) -> Column:
-    return F.xxhash64(c)
 
 
 def tokens_of(docs: DataFrame) -> DataFrame:
     """(doc_id, t): whitespace token arrays — the one tokenization every
-    stage (and every DuckDB twin, via string_split) shares."""
+    stage shares."""
     return docs.select("doc_id", F.split("text", " ").alias("t"))
 
 
-def window_hashes(
-    docs: DataFrame,
-    k: int,
-    hash_fn: Callable[[Column], Column] = _default_hash,
-) -> DataFrame:
+def window_hashes(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, i, h): hash of every stride-1 k-token window. Stride-1 is
     the point — stride-k chunking misses any shared passage offset from a
     chunk boundary. Docs shorter than k emit no windows (guard: Spark's
@@ -75,7 +49,7 @@ def window_hashes(
     return d.select("doc_id", F.explode(starts).alias("i"), "t").select(
         "doc_id",
         "i",
-        hash_fn(F.concat_ws(" ", F.slice("t", F.col("i") + 1, k))).alias("h"),
+        F.xxhash64(F.concat_ws(" ", F.slice("t", F.col("i") + 1, k))).alias("h"),
     )
 
 
@@ -95,25 +69,6 @@ def duplicated_starts(win: DataFrame) -> DataFrame:
         )
         .select("doc_id", "i")
     )
-
-
-def incremental_dup_starts(
-    index_win: DataFrame | None, new_win: DataFrame
-) -> DataFrame:
-    """(doc_id, i) duplicated-window starts for the NEW round's documents:
-    within-round non-winners plus every new window whose hash already exists
-    in the standing index (always a dup — the index occurrence is earlier in
-    ingestion order). ``index_win`` is the persisted (h, doc_id, i) window
-    table (None on the first round); the caller appends ``new_win``
-    afterwards. Old docs are never re-marked — their spans were emitted in
-    their own round."""
-    within = duplicated_starts(new_win)
-    if index_win is None:
-        return within
-    cross = new_win.join(
-        index_win.select("h"), "h", "semi"
-    ).select("doc_id", "i")
-    return within.unionByName(cross).distinct()
 
 
 def merge_spans(marked: DataFrame, k: int) -> DataFrame:
@@ -141,17 +96,13 @@ def merge_spans(marked: DataFrame, k: int) -> DataFrame:
     ).select("doc_id", "s", "e")
 
 
-def remove_duplicate_substrings(
-    docs: DataFrame,
-    k: int = 50,
-    hash_fn: Callable[[Column], Column] = _default_hash,
-) -> DataFrame:
+def remove_duplicate_substrings(docs: DataFrame, k: int = 50) -> DataFrame:
     """(doc_id, text) → (doc_id, text) with every duplicated k-token span
     cut (one global first occurrence survives) — the one-call removal gate
     the export sink runs before packing (CLI ``export-shards
     --dedup-substring K``). Default k=50 follows Lee et al.'s production
     window (§3; theirs is 50 BPE tokens, ours whitespace tokens)."""
-    win = window_hashes(docs, k, hash_fn)
+    win = window_hashes(docs, k)
     spans = merge_spans(duplicated_starts(win), k)
     return cut_spans(docs, spans).select(
         "doc_id", F.col("clean_text").alias("text")

@@ -90,17 +90,6 @@ LINEAGE = T.StructType(
     ]
 )
 
-# metrics: per-round operational log (≈ crawl_operations_log,
-# ld_crawler_schema.sql:46-60) — aggregated, not per-op rows.
-METRICS = T.StructType(
-    [
-        T.StructField("crawl_id", T.IntegerType()),
-        T.StructField("stage", T.StringType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
 LOG_ADDED = "added"
 LOG_UPDATED = "updated"
 LOG_DELETED = "deleted"

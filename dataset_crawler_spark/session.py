@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_heap() -> str:
+    """Half of physical RAM, capped at 24g: local mode runs everything in one
+    JVM, and a heap larger than the machine gets that JVM OOM-killed."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return f"{min(phys_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "dataset_crawler_spark",
     cores: int | str | None = None,
@@ -46,7 +53,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
+        )
         # Deterministic engine: never rely on partition iteration order; sorts
         # are explicit. Broadcast threshold stays default (10 MB) — dims
         # (hosts, robots) are tiny and auto-broadcast.

@@ -1,11 +1,10 @@
 """Training-shard export sink — the artifact end of the corpus pipeline.
 
-`pack_token_bins` (plans/queries.py) decides WHERE every document goes
-(shard, bin); this sink materializes that layout as the on-disk artifact a
-trainer's data loader consumes: one directory per shard, rows sorted by
-(bin_id, doc_id) so each token-budget bin is contiguous in file order, plus
-a tiny manifest recording per-shard doc/token totals for loader-side
-integrity checks.
+`pack_assignments` decides WHERE every document goes (shard, bin); this
+sink materializes that layout as the on-disk artifact a trainer's data
+loader consumes: one directory per shard, rows sorted by (bin_id, doc_id) so
+each token-budget bin is contiguous in file order, plus a tiny manifest
+recording per-shard doc/token totals for loader-side integrity checks.
 
 Scale shape (100 TB): document text moves exactly twice and only ever by
 hash — the doc_id equi-join that attaches text to its assignment, and the
@@ -35,10 +34,9 @@ def pack_assignments(
     docs: DataFrame, n_shards: int = 8, budget: int = 2048
 ) -> DataFrame:
     """(shard, doc_id, n_tokens, bin_id) packing plan over (doc_id, text)
-    docs — the ONE implementation behind the `pack_token_bins` query
-    (plans/queries.py, where the DuckDB twin pins it) and the export CLI.
-    Shard by h60(doc_id) (uniform — no hot key in the window shuffle), pack
-    greedily in doc_id order: bin_id = floor(cum_tokens_before / budget)."""
+    docs, as the export CLI runs it. Shard by h60(doc_id) (uniform — no hot
+    key in the window shuffle), pack greedily in doc_id order:
+    bin_id = floor(cum_tokens_before / budget)."""
     d = docs.select(
         "doc_id",
         F.pmod(h60(F.col("doc_id").cast("string")), F.lit(n_shards)).alias("shard"),
@@ -82,26 +80,22 @@ def write_training_shards(
     """Export packed training shards.
 
     ``docs``: (doc_id, text, …) corpus; ``assignments``: (shard, doc_id,
-    n_tokens, bin_id) from `pack_token_bins`. Writes
+    n_tokens, bin_id) from `pack_assignments`. Writes
     ``<path>/shards/shard=<s>/`` parquet (rows sorted by bin_id, doc_id)
     and ``<path>/manifest/`` with per-shard totals. Returns the corpus-level
     summary the caller logs."""
-    spark = docs.sparkSession
     # the plan feeds three consumers (manifest, shard write, summary) and is
     # itself a window over the corpus — materialize it once
     assignments = assignments.persist()
     try:
         # manifest first: a tiny per-shard aggregate, collected so the
         # summary and the shard-writer fan-out come for free (no extra jobs)
-        man_rows = (
-            assignments.groupBy("shard")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").alias("n_tokens"),
-                F.count_distinct("bin_id").alias("n_bins"),  # non-empty bins
-            )
-            .collect()
+        manifest = assignments.groupBy("shard").agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tokens").alias("n_tokens"),
+            F.count_distinct("bin_id").alias("n_bins"),  # non-empty bins
         )
+        man_rows = manifest.collect()
         n_shards = len(man_rows)
         joined = (
             assignments.join(docs.select("doc_id", "text"), "doc_id")
@@ -115,10 +109,15 @@ def write_training_shards(
             .partitionBy("shard")
             .parquet(os.path.join(path, "shards"))
         )
-        spark.createDataFrame(
-            sorted((r.shard, r.n_docs, r.n_tokens, r.n_bins) for r in man_rows),
-            "shard long, n_docs long, n_tokens long, n_bins long",
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "manifest"))
+        # written from the JVM-side aggregate over the persisted plan, not
+        # from the collected rows: a local-list createDataFrame would start
+        # a Python worker just for these few rows
+        (
+            manifest.coalesce(1)
+            .sortWithinPartitions("shard")
+            .write.mode("overwrite")
+            .parquet(os.path.join(path, "manifest"))
+        )
         return {
             "n_docs": sum(r.n_docs for r in man_rows),
             "n_tokens": sum(r.n_tokens for r in man_rows),

@@ -33,8 +33,8 @@ other consumer.
 Document mapping (interleaved schema): ``doc_id`` = WARC-Target-URI; textual
 payloads (text/*, html, json, xml) become one ``kind='text'`` span holding
 the body; every other content type becomes a ``kind=<major type>`` media
-span pointing at the target URI (``media_ref``) with no text — the decode
-stage is operators/multimodal.py's job, matching the binary-column design.
+span pointing at the target URI (``media_ref``) with no text — decoding is
+left to a downstream media stage, matching the binary-column design.
 """
 
 from __future__ import annotations
@@ -115,7 +115,7 @@ def warc_to_documents(
     """WARC file(s) → interleaved documents (doc_id, spans): 2xx ``response``
     records only (the fetched-page set — request/metadata/warcinfo records
     are transport bookkeeping). Textual bodies become a text span; other
-    content types become a typed media span for the multimodal decode stage.
+    content types become a typed media span for a downstream decode stage.
 
     ``extract_text=True`` runs the WET projection on HTML bodies
     (functions/html.py html_to_text — drop script/style/head blocks, strip
@@ -212,7 +212,7 @@ def write_warc(
         # video: one media span, no text) round-trip through the content
         # type: export as "<kind>/unknown" with an empty body, so re-ingest
         # maps them straight back to the same media span (the bytes were
-        # never stored — decode is the multimodal stage's job). A doc with
+        # never stored — decoding is a downstream media stage's job). A doc with
         # BOTH text and media spans exports its flattened text; a single
         # response record has one content type, so inline media refs ride
         # the text, not the header — the one lossy case, by ISO mapping.

@@ -3,7 +3,7 @@
 Twin of the reference's ``multiple_run`` polling loop (App.java:31-58: claim a
 crawl_setups row → run → mark complete → sleep) restated as round-based
 micro-batches over the snapshot store: each round is one atomic commit of
-(lineage, versions, metrics) partitions tagged with ``crawl_id``
+(lineage, versions) partitions tagged with ``crawl_id``
 (≈ the crawl_log row, CrawlDBOperations.java:258-285).
 
 State is purely log-structured: the diff input for round r is reconstructed
@@ -64,9 +64,7 @@ OP_NOT_MODIFIED = "not_modified"
 #: set (it IS fully handled) and its target enters the NEXT round's
 #: discovered frontier through the same canonicalize → seen-filter →
 #: robots → politeness path as any outlink — so chains resolve one hop per
-#: closure round and cap at the loop's round limit, and the batch
-#: pointer-doubling operator (operators/graph.resolve_redirects) remains
-#: the offline form for standing redirect maps.
+#: closure round and cap at the loop's round limit.
 OP_REDIRECT = "redirect"
 
 
@@ -182,7 +180,8 @@ class CrawlEngine:
         self, live: DataFrame, crawl_id: int, description: str = "", partial: bool = False
     ) -> dict:
         """Ingest one fetched snapshot: diff vs state, write lineage +
-        versions + metrics, commit. Returns the round stats dict."""
+        versions, commit. Returns the round stats dict (it is also the
+        manifest entry's stats)."""
         t0 = time.time()
         prev_round = crawl_id - 1 if crawl_id > 0 else None
         state = self.state_as_of(prev_round)
@@ -203,11 +202,6 @@ class CrawlEngine:
             "deleted": int(op_counts.get("deleted", 0)),
             "wall_s": round(time.time() - t0, 3),
         }
-        metrics = self.spark.createDataFrame(
-            [(crawl_id, "diff", k, float(v)) for k, v in stats.items()],
-            "crawl_id int, stage string, metric string, value double",
-        )
-        self.store.append("metrics", metrics, crawl_id)
         self.store.commit_round(crawl_id, description, stats)
         lineage.unpersist()
         return stats
@@ -306,7 +300,7 @@ class CrawlEngine:
         1. schedule: canonicalize → seen filter (incremental bloom + exact
            fetched table) → robots gate → salted politeness top-k;
         2. fetch the scheduled URLs (``fetch_fn`` — simulated or HTTP);
-        3. diff the fetched snapshot vs state, write lineage/versions/metrics;
+        3. diff the fetched snapshot vs state, write lineage/versions;
         4. extend the seen state: append this round's fetched URLs and the
            OR-merged bloom shards (bloom_merge — the filter is never rebuilt
            from scratch, matching the 10^10-URL incremental design);

@@ -7,6 +7,8 @@ from dataset_crawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dataset_crawler_spark_tests", cores=8, shuffle_partitions=8)
+    # cores from SPARK_GRAFT_CPUS; 8 shuffle partitions are load-bearing
+    # (the bucketed-table tests assume them)
+    s = get_spark("dataset_crawler_spark_tests", cores=None, shuffle_partitions=8)
     yield s
     s.stop()

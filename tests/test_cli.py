@@ -102,7 +102,7 @@ def test_cli_export_shards_closes_the_loop(spark, tmp_path, capsys):
 
     # the removal gate is wired through the flag: cleaned export still
     # verifies and ships every visible doc (the planted-duplicate semantics
-    # are pinned in test_pipeline_ops; this pins the CLI plumbing)
+    # are pinned in test_training_export; this pins the CLI plumbing)
     out_d = str(tmp_path / "corpus_dedup")
     rc = main(["export-shards", "--store", store, "--out", out_d,
                "--n-shards", "4", "--bin-tokens", "256",

@@ -37,7 +37,7 @@ from dataset_crawler_spark.operators import scheduler as SCH
 from dataset_crawler_spark.session import get_spark
 from dataset_crawler_spark.sources.frontier_table import BucketedFrontierTable
 
-spark = get_spark("frontier_resume_child", cores=8, shuffle_partitions=8)
+spark = get_spark("frontier_resume_child", cores=None, shuffle_partitions=8)
 ft = BucketedFrontierTable(spark, {name!r}, {loc!r}, 8)
 assert not ft.exists()  # fresh catalog: nothing carried over from the writer
 ft.ensure_registered()
@@ -75,6 +75,10 @@ def test_bucketed_frontier_resumes_in_fresh_session(spark, tmp_path):
     child.write_text(CHILD.format(repo=REPO, name=name, loc=loc, n_hosts=N_HOSTS))
     env = dict(os.environ)
     env["PYTHONPATH"] = REPO
+    # this session's JVM stays alive next to the child's: cap the child at a
+    # quarter of RAM so the two heaps together cannot claim all of it
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    env["SPARK_GRAFT_DRIVER_MEM"] = f"{phys_mb // 4}m"
     # the child must NOT inherit this session's derby/warehouse metadata —
     # run from a scratch cwd so its in-memory catalog starts empty
     proc = subprocess.run(

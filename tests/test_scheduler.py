@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from dataset_crawler_spark import datagen
@@ -13,6 +15,10 @@ from dataset_crawler_spark.oracle.scheduler_oracle import schedule_round_py
 
 N_URLS = 3000
 N_HOSTS = 25
+
+# every Python execution node Spark plans: (Arrow|Batch)EvalPython,
+# PythonMapInArrow, MapInPandas, FlatMap(Co)GroupsInPandas, ...
+PY_STAGES = r"Python|InPandas"
 
 
 def _key(row):
@@ -343,3 +349,48 @@ def test_frontier_compaction_crash_recovery(spark, tmp_path):
     assert got == want and not os.path.exists(loc + "__old")
 
     spark.sql("DROP TABLE t_frontier_cr")
+
+
+def test_change_rate_estimator_matches_closed_form(spark):
+    """λ̂ and p_stale match the Cho & Garcia-Molina closed forms exactly
+    for every possible (n, X) counter pair at n=12, the X=0 case is
+    IEEE +0.0 (the positive-log form — -ln(1.0) would be -0.0 and hash
+    differently across engines), and λ̂ is strictly monotone in X."""
+    import math
+    import struct
+
+    from dataset_crawler_spark.operators.scheduler import change_rate_estimate
+
+    n = 12
+    rows = [(x, r, r < x) for x in range(n + 1) for r in range(n)]
+    obs = spark.createDataFrame(rows, "doc_id int, r int, changed boolean")
+    got = {
+        r.doc_id: r
+        for r in change_rate_estimate(obs).collect()
+    }
+    prev = -1.0
+    for x in range(n + 1):
+        r = got[x]
+        assert r.n_obs == n and r.n_changes == x
+        assert r.lambda_hat == round(math.log((n + 0.5) / (n - x + 0.5)), 4)
+        assert r.p_stale == round(x / (n + 0.5), 4)
+        assert r.lambda_hat > prev
+        prev = r.lambda_hat
+    # +0.0, not -0.0: sign bit clear in the wire value
+    assert struct.pack(">d", got[0].lambda_hat)[0] & 0x80 == 0
+
+
+def test_change_rate_single_aggregate_no_join(spark):
+    """Plan contract: explode → ONE doc_id hash aggregate → scalar math:
+    exactly one exchange, no join, nothing Python."""
+    docs = spark.createDataFrame([(i,) for i in range(200)], "doc_id long")
+    obs = docs.select(
+        "doc_id", F.explode(F.sequence(F.lit(1), F.lit(12))).alias("r")
+    ).select("doc_id", ((F.col("doc_id") + F.col("r")) % 3 == 0).alias("changed"))
+    df = SCH.change_rate_estimate(obs)
+    df.collect()  # force, so AQE finalizes
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("Exchange") == 1
+    assert "Join" not in plan
+    assert re.search(PY_STAGES, plan) is None

@@ -21,7 +21,7 @@ def test_bloom_zero_false_negatives_and_fp_rate(spark):
     inserted = _urls(spark, 0, N_INSERTED, "in")
     never = _urls(spark, 0, N_NEVER, "out")
     state = bloom = SN.bloom_build(inserted, "url", params).cache()
-    for probe_fn in (SN.bloom_probe_cogroup, SN.bloom_probe_broadcast):
+    for probe_fn in (SN.bloom_probe_cogroup, SN.bloom_probe_scalar):
         hits = probe_fn(inserted, "url", state, params)
         assert hits.where(~F.col("seen")).count() == 0, "bloom false negative!"
         fps = probe_fn(never, "url", state, params).where(F.col("seen")).count()
