@@ -6,7 +6,9 @@ crawler) as an idiomatic Spark engine:
 
 - interleaved text+media documents: ``(doc_id, spans:array<struct<kind,text,media_ref,offset>>)``
 - change-capture as partition-parallel snapshot diff with per-partition lineage
-- URL-seen membership via partitioned Bloom / cuckoo filters (Arrow UDFs)
+- URL-seen membership: bloom + exact confirm (partitioned Bloom filter probed by an
+  Arrow UDF, then an exact anti-join over fetched URLs); resurrect via the
+  tombstone anti-join
 - per-host politeness priority queue (salted window top-k) under robots budgets
 - checkpoint-resumable crawl rounds over an append-only snapshot store
 

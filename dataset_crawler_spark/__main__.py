@@ -52,7 +52,6 @@ import tempfile
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--store", default=None, help="snapshot store root (default: temp dir)")
     p.add_argument("--rounds", type=int, default=2)
-    p.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom")
     p.add_argument("--cores", default=None, help="local[N] cores (ignored under spark-submit)")
 
 
@@ -91,7 +90,6 @@ def run_synthetic(args) -> int:
             rnd,
             bloom_params=params,
             mode=args.mode,
-            seen_filter=args.seen_filter,
             extra_ops=extra_ops,
         )
         print(json.dumps({"round": rnd, "store": store, **stats}))
@@ -163,7 +161,6 @@ def run_crawl(args) -> int:
         fetch,
         bloom_params=params,
         max_rounds=args.rounds,
-        seen_filter=args.seen_filter,
         adapt_budgets=True,
         host_dim_fn=fetch_dim,
         conditional=args.conditional,

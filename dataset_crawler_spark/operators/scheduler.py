@@ -7,10 +7,12 @@ Replaces the reference's implicit scheduling — seed-file order over datasets
 scheduler:
 
 - candidate URLs are canonicalized + deduped, filtered through the seen-set
-  (Bloom pre-filter + exact anti-join confirmation: the filter answers
-  "definitely new" for the vast majority; only probable-seen URLs reach the
-  exact anti-join, so the expensive join sees ~ε·N + true-seen rows — the
-  SURVEY.md §4 anti-join-behind-bloom plan),
+  (bloom + exact confirm: the broadcast Bloom probe answers "definitely new"
+  for the vast majority, and only probable-seen URLs meet the exact
+  anti-join over the store's ``fetched`` table — the SURVEY.md §4
+  anti-join-behind-bloom plan. Without Bloom params the check is the exact
+  anti-join alone. Resurrect mode re-admits tombstoned URLs via the
+  tombstone anti-join in ``CrawlEngine.seen_urls_as_of``),
 - gated by the hosts dimension (availability + robots.txt path prefixes),
 - then budgeted per host with a **two-phase salted top-k** (north_rule skew
   handling): phase 1 ranks within (host, salt) — a giant host's URLs spread
@@ -39,33 +41,6 @@ from dataset_crawler_spark.operators import seen as SN
 DEFAULT_N_SALT = 16
 
 
-#: filters whose total bitset fits comfortably on every executor are probed
-#: broadcast-side (one Arrow pass, no candidate shuffle); larger filters use
-#: the cogroup path where each shard stays on one node. 512 MB ≈ 4·10^8 URLs
-#: @1% FP per executor — beyond that, shard-local probing wins.
-BLOOM_BROADCAST_MAX_BYTES = 512 * 1024 * 1024
-
-
-def _probe_filter(
-    candidates: DataFrame,
-    bloom_state: DataFrame,
-    bloom_params: SN.BloomParams,
-    probe_strategy: str,
-) -> DataFrame:
-    """Attach the probabilistic ``seen`` column with the chosen physical
-    strategy. ``cuckoo``: deletion-capable filter — tombstoned URLs were
-    cuckoo_delete'd from the state, so they probe unseen and become
-    re-fetchable (north_star resurrect mode). Otherwise bloom, with ``auto``
-    picking broadcast vs cogroup by total filter size."""
-    if probe_strategy == "cuckoo":
-        return SN.cuckoo_probe(candidates, "url_c", bloom_state, bloom_params.n_shards)
-    if probe_strategy == "auto":
-        total_bytes = bloom_params.n_shards * bloom_params.n_bits_per_shard // 8
-        probe_strategy = "broadcast" if total_bytes <= BLOOM_BROADCAST_MAX_BYTES else "cogroup"
-    probe = SN.bloom_probe_scalar if probe_strategy == "broadcast" else SN.bloom_probe_cogroup
-    return probe(candidates, "url_c", bloom_state, bloom_params)
-
-
 def _confirm_unseen(probed: DataFrame, seen_urls: DataFrame | None) -> DataFrame:
     """Exact confirm as ONE conditional anti-join: keep a candidate unless
     (filter says maybe-seen AND the exact seen table contains it). seen=false
@@ -82,9 +57,7 @@ def _confirm_unseen(probed: DataFrame, seen_urls: DataFrame | None) -> DataFrame
     shuffled hash anti-join: neither the multi-million-row candidate side nor
     the seen side gets sorted (measured: 2 Sort nodes gone). Build side = one
     partition's slice of the seen table (n_seen/K rows) — bounded by
-    partition count, the same sizing contract as any shuffle. Store the seen
-    table bucketed by url_c with K buckets (sources/seen_table.py) and the
-    seen side needs no exchange either."""
+    partition count, the same sizing contract as any shuffle."""
     if seen_urls is None:
         return probed.where(~F.col("seen")).drop("seen")
     s = seen_urls.select(F.col("url_c").alias("_seen_url")).hint("SHUFFLE_HASH")
@@ -182,7 +155,6 @@ def schedule_round(
     bloom_params: SN.BloomParams | None = None,
     seen_urls: DataFrame | None = None,
     n_salt: int = DEFAULT_N_SALT,
-    probe_strategy: str = "auto",
 ) -> DataFrame:
     """Full scheduling pipeline for one crawl round.
 
@@ -200,18 +172,10 @@ def schedule_round(
     carrying it through the dedup with ``max(seen)`` is exact. The confirm
     anti-join then consumes the aggregate's partitioning directly — zero
     additional candidate-side exchange.
-
-    PRE-CANONICALIZED frontiers: a frontier that already carries a ``url_c``
-    column is trusted (the engine's own drops canonicalize at WRITE time —
-    canon is idempotent, and writing the drop bucketed by url_c with the
-    seen table's bucket count makes the dedup aggregate and the exact-confirm
-    join both exchange-free: the one write-time exchange over the much
-    smaller per-round drop replaces a per-schedule exchange over the whole
-    frontier; measured in BENCH/BASELINE.md "bucketed frontier" note).
     """
-    src = frontier.where(F.col("state") == "pending")
-    if "url_c" not in frontier.columns:
-        src = src.withColumn("url_c", canonicalize_url(F.col("url")))
+    src = frontier.where(F.col("state") == "pending").withColumn(
+        "url_c", canonicalize_url(F.col("url"))
+    )
     raw = src.select("url_c", "seed_rank", "priority", "discovered_crawl_id")
     agg_cols = [
         F.min("seed_rank").alias("seed_rank"),
@@ -219,7 +183,7 @@ def schedule_round(
         F.min("discovered_crawl_id").alias("discovered_crawl_id"),
     ]
     if bloom_state is not None and bloom_params is not None:
-        probed = _probe_filter(raw, bloom_state, bloom_params, probe_strategy)
+        probed = SN.bloom_probe_scalar(raw, "url_c", bloom_state, bloom_params)
         cand = probed.groupBy("url_c").agg(*agg_cols, F.max("seen").alias("seen"))
         cand = _confirm_unseen(cand, seen_urls)
     else:

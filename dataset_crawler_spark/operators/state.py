@@ -74,41 +74,3 @@ def versions_from_round(live: DataFrame, lineage: DataFrame, crawl_id: int) -> D
         live.join(touched, "doc_id", "left_semi")
         .select("doc_id", F.lit(crawl_id).cast("int").alias("crawl_id"), "spans")
     )
-
-
-def merge_state(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold a delta state table onto a materialized base snapshot.
-
-    ``base``: full state as of round c (doc_id, spans, last_op,
-    last_crawl_id) — typically a bucketed-by-doc_id snapshot scan
-    (sources/state_table.py). ``delta``: the same shape folded from rounds
-    (c, r] only. Every delta row is strictly newer than its base row, so the
-    merge is a full-outer join with delta-wins-per-column — spans coalesce
-    (a delete in the delta window has no version row but the doc keeps its
-    last captured spans, identical to the full fold's ``versions ≤ r``
-    lookup).
-
-    Plan shape: delta arrives hash-partitioned on doc_id (it ends in a
-    groupBy(doc_id)); with the base bucketed into
-    ``spark.sql.shuffle.partitions`` buckets the full-outer shuffled-hash
-    join needs NO exchange on either side and builds on the delta (the small
-    side) — per-round state cost O(|delta|), not O(|state|).
-    """
-    b = base.select(
-        "doc_id",
-        F.col("spans").alias("_b_spans"),
-        F.col("last_op").alias("_b_op"),
-        F.col("last_crawl_id").alias("_b_cid"),
-    )
-    d = delta.select(
-        "doc_id",
-        F.col("spans").alias("_d_spans"),
-        F.col("last_op").alias("_d_op"),
-        F.col("last_crawl_id").alias("_d_cid"),
-    )
-    return b.join(d.hint("SHUFFLE_HASH"), "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce("_d_spans", "_b_spans").alias("spans"),
-        F.coalesce("_d_op", "_b_op").alias("last_op"),
-        F.coalesce("_d_cid", "_b_cid").alias("last_crawl_id"),
-    )

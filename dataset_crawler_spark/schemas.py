@@ -38,14 +38,6 @@ SPAN = T.StructType(
     ]
 )
 
-# documents: the interleaved table (input_hint shape).
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), nullable=False),
-        T.StructField("spans", T.ArrayType(SPAN), nullable=False),
-    ]
-)
-
 # frontier: the scheduler's work queue (≈ seed file + crawl_setups,
 # ld_crawler_schema.sql:70-77).
 FRONTIER = T.StructType(
@@ -56,18 +48,6 @@ FRONTIER = T.StructType(
         T.StructField("discovered_crawl_id", T.IntegerType()),
         T.StructField("seed_rank", T.IntegerType()),
         T.StructField("state", T.StringType()),  # pending|fetched|failed|excluded
-    ]
-)
-
-# hosts/robots politeness dimension (≈ dataset metadata + availability,
-# ld_crawler_schema.sql:87-95, CrawlDBOperations.java:105-114).
-HOSTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), nullable=False),
-        T.StructField("crawl_delay_ms", T.IntegerType()),
-        T.StructField("max_fetch_per_round", T.IntegerType()),
-        T.StructField("robots_disallow", T.ArrayType(T.StringType())),
-        T.StructField("is_available", T.BooleanType()),
     ]
 )
 

@@ -69,54 +69,10 @@ OP_REDIRECT = "redirect"
 
 
 class CrawlEngine:
-    def __init__(
-        self,
-        spark: SparkSession,
-        store_root: str,
-        resurrect: bool = False,
-        seen_index=None,
-        state_index=None,
-        frontier_index=None,
-    ):
-        """``seen_index``: optional :class:`sources.seen_table.BucketedSeenTable`
-        — a bucketed-by-url_c performance index over the committed ``fetched``
-        partitions. When set, each round appends to it and the scheduler's
-        exact-confirm anti-join reads it exchange-free (the 10^10-URL layout);
-        the store's ``fetched`` table remains the source of truth for resume.
-
-        ``frontier_index``: optional
-        :class:`sources.frontier_table.BucketedFrontierTable` — the engine's
-        STANDING frontier, canonicalized + bucketed by url_c at write. Feed
-        drops in with :meth:`add_frontier`; ``crawl_round(None, …)`` then
-        schedules straight off the bucketed scan: dedup aggregate and
-        exact-confirm join run exchange-free, and with ``bloom_params=None``
-        the whole membership check is the exact bucketed anti-join (the
-        measured 3× fast path — BENCH schedule_round_bucketed_sec; pair with
-        ``seen_index`` for the exchange-free seen side).
-
-        ``state_index``: optional :class:`sources.state_table.BucketedStateTable`
-        — a bucketed-by-doc_id materialized fold of the state table. When set,
-        ``state_as_of`` reads the newest snapshot ≤ r and folds only the delta
-        rounds on top (O(|delta|) per round instead of O(|history|));
-        :meth:`refresh_state_index` materializes new snapshots at whatever
-        cadence the caller chooses (every round, or the compaction cadence).
-        Like the seen index it is a drop-and-rebuild performance layout over
-        the committed logs, never a source of truth."""
+    def __init__(self, spark: SparkSession, store_root: str, resurrect: bool = False):
         self.spark = spark
         self.store = SnapshotStore(store_root, spark)
         self.resurrect = resurrect
-        self.seen_index = seen_index
-        self.state_index = state_index
-        self.frontier_index = frontier_index
-
-    def add_frontier(self, frontier: DataFrame) -> None:
-        """Append FRONTIER rows to the standing bucketed frontier (requires
-        ``frontier_index``); canonicalization happens at write so every later
-        schedule over the index skips it (and its exchange)."""
-        if self.frontier_index is None:
-            raise ValueError("engine has no frontier_index configured")
-        self.frontier_index.ensure_registered()
-        self.frontier_index.append(frontier)
 
     # -- state --------------------------------------------------------------
 
@@ -128,44 +84,12 @@ class CrawlEngine:
     def state_as_of(self, as_of: int | None) -> DataFrame:
         if as_of is None or not self.store.committed_rounds():
             return self._empty_state()
-        snap = None
-        if self.state_index is not None and self.state_index.exists():
-            snap = self.state_index.latest_snapshot(le=as_of)
-        if snap is None:
-            lineage = self.store.read("lineage", as_of=as_of)
-            versions = self.store.read("versions", as_of=as_of)
-            return S.state_table_as_of(lineage, versions, as_of)
-        base = self.state_index.read_snapshot(snap)
-        if snap == as_of:
-            return base
-        # O(delta) read: fold only rounds (snap, as_of], merge onto the
-        # bucketed snapshot (no exchange on the base side — state_table.py)
-        lineage = self.store.read("lineage", as_of=as_of).where(F.col("crawl_id") > snap)
-        versions = self.store.read("versions", as_of=as_of).where(F.col("crawl_id") > snap)
-        delta = S.state_table_as_of(lineage, versions, as_of)
-        return S.merge_state(base, delta)
-
-    def refresh_state_index(self, as_of: int | None = None) -> int | None:
-        """Materialize the folded state at ``as_of`` (default: last committed
-        round) into the bucketed state index. Itself O(delta) when a previous
-        snapshot exists (the fold being materialized reads through the index).
-        Safe to skip rounds or crash mid-write: readers fold the wider delta
-        from the logs until the next successful refresh."""
-        if self.state_index is None:
-            return None
-        as_of = self.store.last_round() if as_of is None else as_of
-        if as_of is None or as_of in self.state_index.snapshots():
-            return None
-        self.state_index.write_snapshot(self.state_as_of(as_of), as_of)
-        return as_of
+        lineage = self.store.read("lineage", as_of=as_of)
+        versions = self.store.read("versions", as_of=as_of)
+        return S.state_table_as_of(lineage, versions, as_of)
 
     def visible_docs(self, as_of: int | None = None) -> DataFrame:
         as_of = self.store.last_round() if as_of is None else as_of
-        if self.state_index is not None and self.state_index.exists():
-            # O(delta) via the bucketed index: the visible snapshot is the
-            # non-tombstoned slice of the state fold (non-deleted docs always
-            # have a captured version, so spans is never null here)
-            return D.current_docs(self.state_as_of(as_of))
         lineage = self.store.read("lineage", as_of=as_of)
         versions = self.store.read("versions", as_of=as_of)
         return S.reconstruct_as_of(lineage, versions, as_of)
@@ -177,11 +101,19 @@ class CrawlEngine:
     # -- one round ----------------------------------------------------------
 
     def run_round(
-        self, live: DataFrame, crawl_id: int, description: str = "", partial: bool = False
+        self,
+        live: DataFrame,
+        crawl_id: int,
+        description: str = "",
+        partial: bool = False,
+        fetch_counts: dict | None = None,
     ) -> dict:
         """Ingest one fetched snapshot: diff vs state, write lineage +
         versions, commit. Returns the round stats dict (it is also the
-        manifest entry's stats)."""
+        manifest entry's stats). ``fetch_counts`` (scheduled / fetched /
+        failed / … from :meth:`crawl_round`) is merged into the stats before
+        the round's single commit, so a committed manifest entry always
+        carries them."""
         t0 = time.time()
         prev_round = crawl_id - 1 if crawl_id > 0 else None
         state = self.state_as_of(prev_round)
@@ -201,11 +133,11 @@ class CrawlEngine:
             "updated": int(op_counts.get("updated", 0)),
             "deleted": int(op_counts.get("deleted", 0)),
             "wall_s": round(time.time() - t0, 3),
+            **(fetch_counts or {}),
         }
         self.store.commit_round(crawl_id, description, stats)
         lineage.unpersist()
         return stats
-
 
     # -- full lifecycle: schedule → fetch → diff → commit --------------------
 
@@ -213,17 +145,15 @@ class CrawlEngine:
         """Exact table of canonical URLs fetched in committed rounds ≤ as_of.
 
         In resurrect mode, tombstoned docs (last lineage op = deleted) are
-        excluded — their URLs become re-fetchable, the exact-table twin of the
-        cuckoo deletion (north_star: "tombstoned URLs re-admitted")."""
+        excluded by an anti-join — their URLs become re-fetchable (north_star:
+        "tombstoned URLs re-admitted"). The Bloom filter still answers
+        maybe-seen for them; this exact table is what lets them through."""
         if as_of is None or not self.store.committed_rounds():
             return None
-        if self.seen_index is not None and self.seen_index.exists():
-            fetched = self.seen_index.read(as_of=as_of)
-        else:
-            try:
-                fetched = self.store.read("fetched", as_of=as_of).select("url_c").distinct()
-            except FileNotFoundError:
-                return None
+        try:
+            fetched = self.store.read("fetched", as_of=as_of).select("url_c").distinct()
+        except FileNotFoundError:
+            return None
         if not self.resurrect:
             return fetched
         try:
@@ -248,18 +178,6 @@ class CrawlEngine:
         latest = b.agg(F.max("crawl_id")).first()[0]
         return b.where(F.col("crawl_id") == latest).drop("crawl_id")
 
-    def cuckoo_as_of(self, as_of: int | None) -> DataFrame | None:
-        """Latest committed cuckoo shard table ≤ as_of (deletion-capable twin
-        of :meth:`bloom_as_of`)."""
-        if as_of is None or not self.store.committed_rounds():
-            return None
-        try:
-            c = self.store.read("cuckoo", as_of=as_of)
-        except FileNotFoundError:
-            return None
-        latest = c.agg(F.max("crawl_id")).first()[0]
-        return c.where(F.col("crawl_id") == latest).drop("crawl_id")
-
     def validators_as_of(self, as_of: int | None) -> DataFrame | None:
         """Latest HTTP validators (ETag / Last-Modified) per canonical URL
         from committed rounds ≤ as_of — the revalidation dimension joined
@@ -279,15 +197,13 @@ class CrawlEngine:
 
     def crawl_round(
         self,
-        frontier: DataFrame | None,
+        frontier: DataFrame,
         hosts: DataFrame,
         fetch_fn: FetchFn,
         crawl_id: int,
         bloom_params: SN.BloomParams | None = None,
         description: str = "",
         mode: str = "discover",
-        seen_filter: str = "bloom",
-        cuckoo_buckets: int = 1 << 12,
         extra_ops: DataFrame | None = None,
         discover_links: bool = False,
         adapt_budgets: bool = False,
@@ -297,15 +213,17 @@ class CrawlEngine:
         """One complete crawl round (the reference's single_run iteration,
         IncrementalDatasetCrawler.java:121-185, distributed):
 
-        1. schedule: canonicalize → seen filter (incremental bloom + exact
-           fetched table) → robots gate → salted politeness top-k;
+        1. schedule: canonicalize → seen filter (bloom + exact confirm over
+           the fetched table; exact-only when ``bloom_params`` is None) →
+           robots gate → salted politeness top-k;
         2. fetch the scheduled URLs (``fetch_fn`` — simulated or HTTP);
-        3. diff the fetched snapshot vs state, write lineage/versions;
-        4. extend the seen state: append this round's fetched URLs and the
+        3. extend the seen state: append this round's fetched URLs and the
            OR-merged bloom shards (bloom_merge — the filter is never rebuilt
            from scratch, matching the 10^10-URL incremental design);
-        5. commit the round manifest (atomic — crash before this point leaves
-           a replayable round).
+        4. diff the fetched snapshot vs state, write lineage/versions;
+        5. commit the round manifest ONCE, with the diff and fetch-stage
+           counts (atomic — a crash before this point leaves a replayable
+           round).
 
         ``mode="discover"``: frontier is a discovery queue — already-fetched
         URLs are seen-filtered out and the partial diff only ever adds (the
@@ -319,13 +237,9 @@ class CrawlEngine:
         the schedule, and absent docs must read as not-revisited, never as
         deleted.
 
-        ``seen_filter="bloom"`` (default) or ``"cuckoo"`` — the cuckoo state
-        supports deletion: with ``resurrect=True``, URLs tombstoned in a round
-        are cuckoo_delete'd (and excluded from the exact table), so if they
-        reappear in the frontier they are re-fetched and re-added. The cuckoo
-        state is written after the round commit; a crash in between just
-        falls back to the previous round's filter (over-scheduling a few
-        URLs, which the idempotent diff absorbs).
+        With ``resurrect=True``, URLs tombstoned in a round are excluded
+        from the exact seen table (:meth:`seen_urls_as_of`), so if they
+        reappear in the frontier they are re-fetched and re-added.
 
         ``conditional=True`` (with a validator-aware fetcher —
         sources/http_fetch.http_fetcher_conditional): the engine joins its
@@ -341,16 +255,6 @@ class CrawlEngine:
         """
         if mode not in ("discover", "full", "refresh"):
             raise ValueError(f"unknown crawl mode {mode!r}")
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter {seen_filter!r}")
-        if frontier is None:
-            if self.frontier_index is None:
-                raise ValueError("frontier=None needs a configured frontier_index")
-            # standing-frontier fast path: bucketed scan, pre-canonical url_c.
-            # Re-attach first — a fresh session's catalog doesn't know the
-            # on-disk table yet (resume path; same discipline as seen_index)
-            self.frontier_index.ensure_registered()
-            frontier = self.frontier_index.read()
         prev_round = crawl_id - 1 if crawl_id > 0 else None
         if adapt_budgets and prev_round is not None and self.store.committed_rounds():
             # failure-driven politeness: the budget the politeness window
@@ -363,21 +267,13 @@ class CrawlEngine:
             )
         discover = mode == "discover"
         partial = mode != "full"  # refresh keeps the partial diff (no deletes)
-        cuckoo = seen_filter == "cuckoo"
         seen = self.seen_urls_as_of(prev_round) if discover else None
-        filter_state = None
+        bloom_state = None
         if discover and bloom_params is not None:
-            filter_state = (
-                self.cuckoo_as_of(prev_round) if cuckoo else self.bloom_as_of(prev_round)
-            )
+            bloom_state = self.bloom_as_of(prev_round)
 
         sched = SCH.schedule_round(
-            frontier,
-            hosts,
-            bloom_state=filter_state,
-            bloom_params=bloom_params if filter_state is not None else None,
-            seen_urls=seen,
-            probe_strategy="cuckoo" if (cuckoo and filter_state is not None) else "auto",
+            frontier, hosts, bloom_state=bloom_state, bloom_params=bloom_params, seen_urls=seen
         ).cache()
         n_scheduled = sched.count()
         fetch_input = sched
@@ -508,9 +404,7 @@ class CrawlEngine:
                 )
             )
         self.store.append("fetched", fetched, crawl_id)
-        if self.seen_index is not None:
-            self.seen_index.append(fetched, crawl_id)
-        if bloom_params is not None and not cuckoo:
+        if bloom_params is not None:
             prev_bloom = self.bloom_as_of(prev_round)
             new_shards = SN.bloom_build(fetched, "url_c", bloom_params)
             merged = (
@@ -520,9 +414,6 @@ class CrawlEngine:
             )
             self.store.append("bloom", merged, crawl_id)
 
-        stats = self.run_round(
-            live_for_diff, crawl_id, description=description, partial=partial
-        )
         n_not_modified = (
             int(live_raw.where(F.col("status") == OP_NOT_MODIFIED).count())
             if (conditional and status_aware)
@@ -533,34 +424,20 @@ class CrawlEngine:
             if status_aware
             else 0
         )
-        stats["scheduled"] = int(n_scheduled)
-        stats["fetched"] = int(n_fetched)
-        stats["not_modified"] = n_not_modified
-        stats["redirected"] = n_redirected
-        stats["failed"] = (
-            int(n_scheduled) - int(n_fetched) - n_not_modified - n_redirected
+        fetch_counts = {
+            "scheduled": int(n_scheduled),
+            "fetched": int(n_fetched),
+            "not_modified": n_not_modified,
+            "redirected": n_redirected,
+            "failed": int(n_scheduled) - int(n_fetched) - n_not_modified - n_redirected,
+        }
+        stats = self.run_round(
+            live_for_diff,
+            crawl_id,
+            description=description,
+            partial=partial,
+            fetch_counts=fetch_counts,
         )
-        # re-commit the manifest entry with the fetch-stage counts included —
-        # idempotent overwrite of the same round; the manifest is the round's
-        # ops record (crawl_log twin), so scheduled/fetched/failed belong in it
-        self.store.commit_round(crawl_id, description, stats)
-
-        if bloom_params is not None and cuckoo:
-            prev_ck = self.cuckoo_as_of(prev_round)
-            if prev_ck is None:  # explicit: DataFrame must never be truth-tested
-                prev_ck = SN.cuckoo_empty(self.spark, bloom_params.n_shards, cuckoo_buckets)
-            ck = SN.cuckoo_insert(
-                prev_ck, fetched, "url_c", bloom_params.n_shards,
-                n_buckets_if_missing=cuckoo_buckets,
-            )
-            if self.resurrect:
-                tomb = (
-                    self.store.read("lineage", as_of=crawl_id)
-                    .where((F.col("crawl_id") == crawl_id) & (F.col("op") == "deleted"))
-                    .select(F.col("doc_id").alias("url_c"))
-                )
-                ck = SN.cuckoo_delete(ck, tomb, "url_c", bloom_params.n_shards)
-            self.store.append("cuckoo", ck, crawl_id)
 
         sched.unpersist()
         live_raw.unpersist()
@@ -582,7 +459,6 @@ class CrawlEngine:
         fetch_fn: FetchFn,
         bloom_params: SN.BloomParams | None = None,
         max_rounds: int = 25,
-        seen_filter: str = "bloom",
         adapt_budgets: bool = False,
         host_dim_fn=None,
         conditional: bool = False,
@@ -686,7 +562,6 @@ class CrawlEngine:
                 bloom_params=bloom_params,
                 description=f"closure round {crawl_id}",
                 mode="discover",
-                seen_filter=seen_filter,
                 discover_links=True,
                 adapt_budgets=adapt_budgets,
                 conditional=conditional,
@@ -717,11 +592,6 @@ class CrawlEngine:
                 continue
             if vacuum:
                 out[t]["vacuumed"] = len(self.store.vacuum(t))
-        # same cadence, same safety story: refresh the bucketed state index
-        # (stale-until-refreshed is transparent — readers fold the delta)
-        refreshed = self.refresh_state_index(as_of=upto)
-        if refreshed is not None:
-            out["state_index"] = {"snapshot_at": refreshed}
         return out
 
     # -- failure retry (T5) + operation log reads ----------------------------
@@ -1057,7 +927,6 @@ def streaming_crawl_rounds(
     checkpoint: str,
     bloom_params: SN.BloomParams | None = None,
     mode: str = "discover",
-    seen_filter: str = "bloom",
     max_files_per_batch: int | None = None,
     discover_links: bool = False,
     feed_discoveries: bool = False,
@@ -1132,7 +1001,6 @@ def streaming_crawl_rounds(
             bloom_params=bloom_params,
             description=f"stream batch {batch_id}",
             mode=mode,
-            seen_filter=seen_filter,
             discover_links=discover_links or feed_discoveries,
         )
         if feed_discoveries and stats["scheduled"] > 0:

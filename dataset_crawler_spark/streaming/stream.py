@@ -65,7 +65,7 @@ def streaming_url_dedup(stream: DataFrame, watermark: str = "10 minutes") -> Dat
     stream, whose state grows forever — evicts a key's state once the
     watermark passes its event time. At 10^10-URL scale that bounds
     streaming dedup state to the watermark window; the durable long-horizon
-    seen set stays the bucketed table + bloom, refreshed per round, and this
+    seen set stays bloom + the exact ``fetched`` table, extended per round, and this
     operator guards the intra-horizon stream in front of it."""
     return (
         stream.withColumn("url_c", canonicalize_url(F.col("url")))

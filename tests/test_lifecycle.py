@@ -85,6 +85,41 @@ def test_discover_mode_never_refetches(spark, tmp_path):
     assert got == want
 
 
+def test_crawl_round_commits_once_with_fetch_counts(spark, tmp_path, monkeypatch):
+    """One commit point per round: crawl_round calls commit_round exactly
+    once, and that single manifest entry already carries the fetch-stage
+    counts — no crash window leaves a committed round without them."""
+    from dataset_crawler_spark.sources.snapshots import SnapshotStore
+
+    commits = []
+    orig = SnapshotStore.commit_round
+
+    def counting(store, crawl_id, description="", stats=None):
+        commits.append(crawl_id)
+        return orig(store, crawl_id, description, stats)
+
+    monkeypatch.setattr(SnapshotStore, "commit_round", counting)
+    eng = CrawlEngine(spark, str(tmp_path / "store"))
+    frontier = _frontier(spark)
+    hosts = _open_hosts(spark)
+    params = SN.BloomParams.for_capacity(N_DOCS, fp_rate=0.01, n_shards=8)
+    # half the corpus unreachable → the round has real failures to count
+    corpus = _corpus(spark, 0).where(F.xxhash64("doc_id") % 2 == 0)
+
+    for rnd in (0, 1):
+        stats = eng.crawl_round(frontier, hosts, simulated_fetcher(corpus), rnd,
+                                bloom_params=params, mode="discover")
+        assert commits == list(range(rnd + 1)), "exactly one commit per crawl_round"
+        entry = next(r for r in eng.store.manifest()["rounds"] if r["crawl_id"] == rnd)
+        assert entry["stats"] == stats
+        assert {"scheduled", "fetched", "not_modified", "redirected", "failed"} <= entry["stats"].keys()
+        assert entry["stats"]["scheduled"] == (
+            entry["stats"]["fetched"] + entry["stats"]["failed"]
+        )
+    first = next(r for r in eng.store.manifest()["rounds"] if r["crawl_id"] == 0)
+    assert first["stats"]["fetched"] > 0 and first["stats"]["failed"] > 0
+
+
 def _live_frontier(spark, rnd):
     """Full re-crawl frontier = the round's live URI list (the reference
     fetches every URI the endpoint reports live, DataCrawler.java:235-258);
@@ -121,10 +156,12 @@ def test_full_mode_matches_reference_oracle(spark, tmp_path):
     assert got == oracle.visible_docs()
 
 
-def test_cuckoo_resurrection_refetches_tombstoned(spark, tmp_path):
-    """North_star resurrect mode: deleted docs are cuckoo_delete'd from the
-    seen state, so when they reappear in the frontier they get re-fetched and
-    re-added — while alive already-fetched docs stay blocked."""
+def test_resurrection_refetches_tombstoned(spark, tmp_path):
+    """North_star resurrect mode: deleted docs drop out of the exact seen
+    table (the tombstone anti-join), so when they reappear in the frontier
+    the Bloom filter's maybe-seen is overruled by the exact confirm and they
+    get re-fetched and re-added — while alive already-fetched docs stay
+    blocked."""
     eng = CrawlEngine(spark, str(tmp_path / "store"), resurrect=True)
     hosts = _open_hosts(spark)
     params = SN.BloomParams.for_capacity(N_DOCS, fp_rate=0.01, n_shards=4)
@@ -134,7 +171,7 @@ def test_cuckoo_resurrection_refetches_tombstoned(spark, tmp_path):
     for rnd in (0, 1):
         eng.crawl_round(
             _live_frontier(spark, rnd), hosts, simulated_fetcher(_corpus(spark, rnd)),
-            rnd, bloom_params=params, mode="full", seen_filter="cuckoo",
+            rnd, bloom_params=params, mode="full",
         )
     deleted_r1 = {
         r.doc_id
@@ -149,7 +186,7 @@ def test_cuckoo_resurrection_refetches_tombstoned(spark, tmp_path):
     corpus2 = _corpus(spark, 2)
     s2 = eng.crawl_round(
         _frontier(spark), hosts, simulated_fetcher(corpus2), 2,
-        bloom_params=params, mode="discover", seen_filter="cuckoo",
+        bloom_params=params, mode="discover",
     )
     fetched2 = {
         r.url_c
@@ -173,48 +210,6 @@ def test_cuckoo_resurrection_refetches_tombstoned(spark, tmp_path):
     } - deleted_r1
     assert not (fetched2 & alive_fetched)
     assert s2["added"] == s2["fetched"]  # resurrections come back as added
-
-
-def test_bucketed_seen_index_matches_store_path(spark, tmp_path):
-    """The bucketed seen index (sources/seen_table.py) is a pure storage
-    layout: discover rounds with and without it must schedule/fetch identical
-    URL sets, and the confirm anti-join must consume the index as a bucketed
-    scan (no seen-side exchange — the 10^10-URL plan shape)."""
-    from dataset_crawler_spark.operators import scheduler as SCH
-    from dataset_crawler_spark.sources.seen_table import BucketedSeenTable
-
-    frontier = _frontier(spark)
-    hosts = _open_hosts(spark)
-    params = SN.BloomParams.for_capacity(N_DOCS, fp_rate=0.01, n_shards=8)
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    name = f"seen_idx_{abs(hash(str(tmp_path))) % 10**8}"
-    idx = BucketedSeenTable(spark, name, str(tmp_path / "seen_idx"), n_buckets)
-    plain = CrawlEngine(spark, str(tmp_path / "plain"))
-    fast = CrawlEngine(spark, str(tmp_path / "fast"), seen_index=idx)
-    try:
-        for rnd in (0, 1):
-            corpus = _corpus(spark, rnd)
-            sp = plain.crawl_round(frontier, hosts, simulated_fetcher(corpus), rnd,
-                                   bloom_params=params, mode="discover")
-            sf = fast.crawl_round(frontier, hosts, simulated_fetcher(corpus), rnd,
-                                  bloom_params=params, mode="discover")
-            keys = ("scheduled", "fetched", "added", "updated", "deleted")
-            assert {k: sp[k] for k in keys} == {k: sf[k] for k in keys}, f"round {rnd}"
-        a = {r.url_c for r in plain.store.read("fetched").collect()}
-        b = {r.url_c for r in fast.store.read("fetched").collect()}
-        assert a == b
-
-        # plan shape: the confirm join reads the index as a bucketed scan
-        sched = SCH.schedule_round(
-            frontier, hosts,
-            bloom_state=fast.bloom_as_of(1), bloom_params=params,
-            seen_urls=fast.seen_urls_as_of(1),
-        )
-        sched.count()
-        plan = sched._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan and "SelectedBucketsCount" in plan
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_ops_log_records_failures_and_retry_requeues(spark, tmp_path):
@@ -568,122 +563,6 @@ def test_adaptive_budget_shrinks_next_round_schedule(spark, tmp_path):
         eng2.retry_frontier(0), hosts, simulated_fetcher(corpus), 1, mode="discover"
     )
     assert s1_static["scheduled"] == 8
-
-
-def test_engine_standing_bucketed_frontier_fast_path(spark, tmp_path):
-    """Engine-level fast path: a standing frontier in the bucketed index
-    (frontier_index + seen_index, no bloom) consumes the same URLs round by
-    round as the classic bloom+plain engine under the same budgets — the
-    3× schedule layout is reachable through CrawlEngine, not just the
-    operator."""
-    from dataset_crawler_spark.sources.frontier_table import BucketedFrontierTable
-    from dataset_crawler_spark.sources.seen_table import BucketedSeenTable
-
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    frontier = _frontier(spark)
-    # tight budgets force the standing frontier to drain over several rounds
-    hosts = spark.createDataFrame(
-        [(f"host{i:04d}.example.org", 100, 7, [], True) for i in range(N_HOSTS)],
-        "host string, crawl_delay_ms int, max_fetch_per_round int, "
-        "robots_disallow array<string>, is_available boolean",
-    )
-    corpus = _corpus(spark, 0)
-    params = SN.BloomParams.for_capacity(N_DOCS, fp_rate=0.01, n_shards=8)
-
-    plain = CrawlEngine(spark, str(tmp_path / "plain"))
-    fast = CrawlEngine(
-        spark, str(tmp_path / "fast"),
-        seen_index=BucketedSeenTable(spark, "t_lf_seen", str(tmp_path / "si"), n_buckets),
-        frontier_index=BucketedFrontierTable(spark, "t_lf_frontier", str(tmp_path / "fi"), n_buckets),
-    )
-    try:
-        fast.add_frontier(frontier)
-
-        for rnd in range(2):
-            sp = plain.crawl_round(frontier, hosts, simulated_fetcher(corpus), rnd,
-                                   bloom_params=params, mode="discover")
-            sf = fast.crawl_round(None, hosts, simulated_fetcher(corpus), rnd,
-                                  mode="discover")
-            assert (sp["scheduled"], sp["fetched"]) == (sf["scheduled"], sf["fetched"])
-            a = {r.url_c for r in plain.store.read("fetched", as_of=rnd)
-                 .where(F.col("crawl_id") == rnd).collect()}
-            b = {r.url_c for r in fast.store.read("fetched", as_of=rnd)
-                 .where(F.col("crawl_id") == rnd).collect()}
-            assert a == b  # identical pinned crawl order under identical budgets
-    finally:  # the session-scoped fixture outlives tmp_path — always detach
-        spark.sql("DROP TABLE IF EXISTS t_lf_seen")
-        spark.sql("DROP TABLE IF EXISTS t_lf_frontier")
-
-
-def test_bucketed_state_index_matches_log_fold(spark, tmp_path):
-    """The bucketed state index (sources/state_table.py) is a pure storage
-    layout: state reads through it must equal the full log fold row-for-row,
-    a stale snapshot (no refresh for newer rounds) must be transparently
-    topped up from the delta logs, and the merge plan must consume the
-    snapshot as a bucketed scan with no exchange above it — the O(|delta|)
-    per-round plan shape for a 10^10-doc state table."""
-    from dataset_crawler_spark.sources.state_table import BucketedStateTable
-
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    name = f"state_idx_{abs(hash(str(tmp_path))) % 10**8}"
-    idx = BucketedStateTable(spark, name, str(tmp_path / "state_idx"), n_buckets)
-    plain = CrawlEngine(spark, str(tmp_path / "plain"))
-    fast = CrawlEngine(spark, str(tmp_path / "fast"), state_index=idx)
-    try:
-        for rnd in range(3):
-            live = _corpus(spark, rnd)
-            plain.run_round(live, rnd)
-            fast.run_round(live, rnd)
-            if rnd == 1:
-                assert fast.refresh_state_index() == 1  # snapshot at round 1 only
-
-        def rows(df):
-            return sorted(
-                (
-                    r.doc_id,
-                    tuple((s.kind, s.text, s.media_ref, s.offset) for s in (r.spans or ())),
-                    r.last_op,
-                    r.last_crawl_id,
-                )
-                for r in df.collect()
-            )
-
-        # exact-snapshot read (snap == as_of) and delta-merge read (snap < as_of)
-        assert rows(fast.state_as_of(1)) == rows(plain.state_as_of(1))
-        merged = fast.state_as_of(2)
-        assert rows(merged) == rows(plain.state_as_of(2))
-
-        # plan shape: snapshot arrives as a bucketed scan (no exchange above
-        # it); the merge is a full-outer shuffled-hash join; the only
-        # exchanges in the whole read are the two O(delta) log folds
-        merged.count()
-        plan = merged._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan and "SelectedBucketsCount" in plan
-        assert "ShuffledHashJoin" in plan and "FullOuter" in plan
-        # the base (probe) side of the merge join is the bucketed scan with
-        # NO exchange between them — the join's stream side is printed first,
-        # so the slice from the join node to the bucketed scan is exactly the
-        # base branch. (Total exchange count is AQE-run-dependent at fixture
-        # scale: the tiny versions fold may broadcast or shuffle.)
-        base_branch = plan[plan.index("ShuffledHashJoin") : plan.index("Bucketed: true")]
-        assert "Exchange" not in base_branch
-        assert plan.count("Exchange hashpartitioning") <= 3  # delta folds only
-
-        # visible_docs routed through the index ≡ the full-fold reconstruction
-        def vrows(df):
-            return sorted(
-                (r.doc_id, tuple((s.kind, s.text, s.media_ref, s.offset) for s in r.spans))
-                for r in df.collect()
-            )
-
-        assert vrows(fast.visible_docs(2)) == vrows(plain.visible_docs(2))
-
-        # refresh is idempotent and itself reads O(delta) through the index
-        assert fast.refresh_state_index() == 2
-        assert fast.refresh_state_index() is None
-        assert rows(fast.state_as_of(2)) == rows(plain.state_as_of(2))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_change_rate_frontier_matches_observation_algebra(spark, tmp_path):

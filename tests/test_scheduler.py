@@ -134,10 +134,11 @@ def test_schedule_matches_oracle_with_seen_set(spark):
     assert not ({u for u, *_ in got} & seen_py)
 
 
-def test_probe_strategy_equivalence(spark):
-    """Every physical probe strategy (broadcast scalar UDF, cogrouped shard
-    probing, exact-table-only) must produce the identical schedule — the
-    choice is a physical-plan decision, never a semantic one."""
+def test_bloom_confirm_matches_exact_only(spark):
+    """The seen check's two forms — Bloom probe + exact confirm, and the
+    exact anti-join alone (``bloom_params=None``) — must produce the
+    identical schedule: the Bloom filter is a physical shortcut, never a
+    semantic one."""
     f = datagen.frontier(spark, N_URLS, n_hosts=N_HOSTS)
     h = datagen.hosts(spark, N_HOSTS)
     seen_py = {
@@ -149,17 +150,13 @@ def test_probe_strategy_equivalence(spark):
     params = SN.BloomParams.for_capacity(len(seen_py), fp_rate=0.01, n_shards=8)
     bloom = SN.bloom_build(seen_df, "url_c", params).cache()
 
-    results = [
-        _collect_schedule(
-            SCH.schedule_round(
-                f, h, bloom_state=bloom, bloom_params=params, seen_urls=seen_df,
-                probe_strategy=strat,
-            )
-        )
-        for strat in ("broadcast", "cogroup")
-    ]
-    results.append(_collect_schedule(SCH.schedule_round(f, h, seen_urls=seen_df)))
-    assert results[0] == results[1] == results[2]
+    with_bloom = _collect_schedule(
+        SCH.schedule_round(f, h, bloom_state=bloom, bloom_params=params, seen_urls=seen_df)
+    )
+    exact_only = _collect_schedule(SCH.schedule_round(f, h, seen_urls=seen_df))
+    assert with_bloom == exact_only
+    assert with_bloom  # a non-trivial schedule, not two empty ones
+    bloom.unpersist()
 
 
 def test_salting_invariance(spark):
@@ -237,118 +234,6 @@ def test_centrality_host_budgets(spark):
         for r in SCH.centrality_host_budgets(zero, hosts).collect()
     }
     assert all(v == (40, 1.0) for v in kept.values())
-
-
-def test_bucketed_frontier_path_matches_plain_and_drops_exchanges(spark, tmp_path):
-    """The bucketed-frontier layout (sources/frontier_table.py): writing the
-    drop canonicalized + bucketed by url_c makes schedule_round's dedup
-    aggregate and exact-confirm join exchange-free, with OUTPUT IDENTICAL to
-    the bloom+plain path. Pins both the equality and the plan shape (no
-    url_c-keyed exchange anywhere in the bucketed plan)."""
-    from dataset_crawler_spark.sources.frontier_table import BucketedFrontierTable
-    from dataset_crawler_spark.sources.seen_table import BucketedSeenTable
-
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    frontier = datagen.frontier(spark, 4000, n_hosts=20)
-    hosts = datagen.hosts(spark, 20)
-    seen_plain = (
-        frontier.where(F.xxhash64("url") % 3 == 0)
-        .select(SCH.canonicalize_url(F.col("url")).alias("url_c"))
-        .distinct()
-    )
-    st = BucketedSeenTable(spark, "t_seen_bf", str(tmp_path / "seen"), n_buckets)
-    st.append(seen_plain, 0)
-    seen = st.read()
-    ft = BucketedFrontierTable(spark, "t_frontier_bf", str(tmp_path / "frontier"), n_buckets)
-    ft.append(frontier)
-
-    params = SN.BloomParams.for_capacity(4000, fp_rate=0.01, n_shards=4)
-    bloom = SN.bloom_build(seen, "url_c", params)
-    cols = ["url_c", "host", "seed_rank", "priority", "rank_in_host", "scheduled_offset_ms"]
-    plain = SCH.schedule_round(
-        frontier, hosts, bloom_state=bloom, bloom_params=params, seen_urls=seen
-    ).select(cols)
-    bucketed = SCH.schedule_round(ft.read(), hosts, seen_urls=seen).select(cols)
-
-    assert plain.exceptAll(bucketed).count() == 0
-    assert bucketed.exceptAll(plain).count() == 0
-
-    bucketed.collect()
-    plan = bucketed._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(url_c" not in plan
-    assert "Exchange hashpartitioning(_seen_url" not in plan
-    # cleanup catalog entries for other tests in this session
-    spark.sql("DROP TABLE t_seen_bf")
-    spark.sql("DROP TABLE t_frontier_bf")
-
-
-def test_bucketed_frontier_compaction_keeps_output_and_plan(spark, tmp_path):
-    """Small-files maintenance: per-round appends each add up to a full
-    bucket file set; compact() rewrites to ≤1 file per bucket with the
-    scheduled output byte-identical and the exchange-free plan preserved."""
-    from dataset_crawler_spark.sources.frontier_table import BucketedFrontierTable
-
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    hosts = datagen.hosts(spark, 20)
-    ft = BucketedFrontierTable(
-        spark, "t_frontier_cp", str(tmp_path / "frontier"), n_buckets
-    )
-    full = datagen.frontier(spark, 3000, n_hosts=20)
-    for rnd in range(4):  # 4 per-round drops → 4 appended file sets
-        ft.append(full.where(F.xxhash64("url") % 4 == rnd))
-
-    cols = ["url_c", "host", "seed_rank", "priority", "rank_in_host",
-            "scheduled_offset_ms"]
-    before = SCH.schedule_round(ft.read(), hosts).select(cols)
-    before_rows = before.collect()
-
-    info = ft.compact()
-    assert info["files_after"] <= n_buckets < info["files_before"]
-
-    after = SCH.schedule_round(ft.read(), hosts).select(cols)
-    after_rows = after.collect()
-    assert sorted(map(tuple, before_rows)) == sorted(map(tuple, after_rows))
-    assert len(after_rows) > 0
-
-    after.collect()
-    plan = after._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(url_c" not in plan
-    spark.sql("DROP TABLE t_frontier_cp")
-
-
-def test_frontier_compaction_crash_recovery(spark, tmp_path):
-    """compact()'s swap renames the live dir ASIDE before renaming the
-    rewrite IN, so a crash at either point leaves one complete copy that
-    ensure_registered() heals — never an empty table (the failure mode of
-    rmtree-then-rename: crash between them loses the only copy and the next
-    ensure_registered CREATEs an empty frontier)."""
-    import os
-    import shutil
-
-    from dataset_crawler_spark.sources.frontier_table import BucketedFrontierTable
-
-    loc = str(tmp_path / "frontier")
-    ft = BucketedFrontierTable(spark, "t_frontier_cr", loc, 8)
-    ft.append(datagen.frontier(spark, 1000, n_hosts=10))
-    want = sorted(r.url_c for r in ft.read().select("url_c").collect())
-
-    # crash point 1: between rename-aside and rename-in — live dir is gone,
-    # the only copy sits in __old (catalog entry already dropped by compact)
-    spark.sql("DROP TABLE t_frontier_cr")
-    os.rename(loc, loc + "__old")
-    ft.ensure_registered()
-    got = sorted(r.url_c for r in ft.read().select("url_c").collect())
-    assert got == want and not os.path.exists(loc + "__old")
-
-    # crash point 2: after rename-in, before deleting the superseded copy —
-    # live dir is the rewrite, __old is stale and must be dropped untouched
-    spark.sql("DROP TABLE t_frontier_cr")
-    shutil.copytree(loc, loc + "__old")
-    ft.ensure_registered()
-    got = sorted(r.url_c for r in ft.read().select("url_c").collect())
-    assert got == want and not os.path.exists(loc + "__old")
-
-    spark.sql("DROP TABLE t_frontier_cr")
 
 
 def test_change_rate_estimator_matches_closed_form(spark):

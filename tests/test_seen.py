@@ -1,4 +1,4 @@
-"""Property tests for the URL-seen filters (SURVEY.md §5.3, FIXTURES.md §6)."""
+"""Property tests for the URL-seen Bloom filter (SURVEY.md §5.3, FIXTURES.md §6)."""
 
 from __future__ import annotations
 
@@ -21,11 +21,10 @@ def test_bloom_zero_false_negatives_and_fp_rate(spark):
     inserted = _urls(spark, 0, N_INSERTED, "in")
     never = _urls(spark, 0, N_NEVER, "out")
     state = bloom = SN.bloom_build(inserted, "url", params).cache()
-    for probe_fn in (SN.bloom_probe_cogroup, SN.bloom_probe_scalar):
-        hits = probe_fn(inserted, "url", state, params)
-        assert hits.where(~F.col("seen")).count() == 0, "bloom false negative!"
-        fps = probe_fn(never, "url", state, params).where(F.col("seen")).count()
-        assert fps / N_NEVER < 0.03, f"FP rate too high: {fps / N_NEVER}"
+    hits = SN.bloom_probe_scalar(inserted, "url", state, params)
+    assert hits.where(~F.col("seen")).count() == 0, "bloom false negative!"
+    fps = SN.bloom_probe_scalar(never, "url", state, params).where(F.col("seen")).count()
+    assert fps / N_NEVER < 0.03, f"FP rate too high: {fps / N_NEVER}"
     bloom.unpersist()
 
 
@@ -37,24 +36,5 @@ def test_bloom_merge_incremental_rounds(spark):
         SN.bloom_build(a, "url", params), SN.bloom_build(b, "url", params)
     ).cache()
     both = a.unionByName(b)
-    assert SN.bloom_probe_cogroup(both, "url", merged, params).where(~F.col("seen")).count() == 0
+    assert SN.bloom_probe_scalar(both, "url", merged, params).where(~F.col("seen")).count() == 0
 
-
-def test_cuckoo_insert_probe_delete(spark):
-    n_shards = 8
-    n_buckets = SN.cuckoo_capacity_buckets(N_INSERTED // n_shards)
-    inserted = _urls(spark, 0, N_INSERTED, "in")
-    never = _urls(spark, 0, N_NEVER, "out")
-    state = SN.cuckoo_build(inserted, "url", n_shards, n_buckets).cache()
-
-    hits = SN.cuckoo_probe(inserted, "url", state, n_shards)
-    assert hits.where(~F.col("seen")).count() == 0, "cuckoo false negative!"
-    fps = SN.cuckoo_probe(never, "url", state, n_shards).where(F.col("seen")).count()
-    assert fps / N_NEVER < 0.01, f"cuckoo FP rate too high: {fps / N_NEVER}"
-
-    # delete a slice, it must miss afterwards; the rest must still hit
-    doomed = _urls(spark, 0, 1000, "in")
-    kept = _urls(spark, 1000, N_INSERTED - 1000, "in")
-    state2 = SN.cuckoo_delete(state, doomed, "url", n_shards).cache()
-    assert SN.cuckoo_probe(doomed, "url", state2, n_shards).where(F.col("seen")).count() == 0
-    assert SN.cuckoo_probe(kept, "url", state2, n_shards).where(~F.col("seen")).count() == 0
