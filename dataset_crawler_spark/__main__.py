@@ -76,23 +76,24 @@ def run_synthetic(args) -> int:
     hosts = datagen.hosts(spark, args.n_hosts)
     params = SN.BloomParams.for_capacity(args.n_urls, fp_rate=0.01, n_shards=32)
 
-    for rnd in range(args.rounds):
+    for _ in range(args.rounds):
+        rid = eng.next_round()
         extra_ops = None
         round_hosts = hosts
         if args.probe_endpoints:
             round_hosts = PR.probe_hosts(hosts)
-            extra_ops = PR.probe_ops_rows(round_hosts, rnd)
+            extra_ops = PR.probe_ops_rows(round_hosts, rid)
         stats = eng.crawl_round(
             frontier,
             round_hosts,
-            simulated_fetcher(datagen.documents_for_round(spark, n_docs, rnd,
+            simulated_fetcher(datagen.documents_for_round(spark, n_docs, rid,
                                                           n_hosts=args.n_hosts)),
-            rnd,
+            rid,
             bloom_params=params,
             mode=args.mode,
             extra_ops=extra_ops,
         )
-        print(json.dumps({"round": rnd, "store": store, **stats}))
+        print(json.dumps({"round": rid, "store": store, **stats}))
     return 0
 
 

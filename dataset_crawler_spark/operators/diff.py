@@ -269,36 +269,3 @@ def snapshot_diff(
     )
     return added.unionByName(deleted).unionByName(updated_small).unionByName(updated_big)
 
-
-def apply_diff(state: DataFrame, live: DataFrame, lineage: DataFrame, crawl_id: int) -> DataFrame:
-    """Fold one round's lineage into the state table (append-only semantics).
-
-    Returns the new state: (doc_id, spans, last_op, last_crawl_id). Docs with
-    no lineage this round carry forward unchanged — including tombstones
-    (matching the reference, where untouched rows simply keep their last log,
-    crawl_utils/Properties.java:41-59 fold).
-    """
-    ops = lineage.select("doc_id", F.col("op").alias("_op"))
-    cur = live.select("doc_id", F.col("spans").alias("_live_spans"))
-    out = (
-        state.join(ops, "doc_id", "full_outer")
-        .join(cur, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_op").isin(LOG_ADDED, LOG_UPDATED), F.col("_live_spans"))
-            .otherwise(F.col("spans"))
-            .alias("spans"),
-            F.coalesce(F.col("_op"), F.col("last_op")).alias("last_op"),
-            F.when(F.col("_op").isNotNull(), F.lit(crawl_id).cast("int"))
-            .otherwise(F.col("last_crawl_id"))
-            .alias("last_crawl_id"),
-        )
-    )
-    return out
-
-
-def current_docs(state: DataFrame) -> DataFrame:
-    """The visible snapshot: docs whose last state is not deleted — the net
-    W1/W3 fold (entities/Resource.java:43-52 consumed negated at
-    DatasetRepresentation.java:44)."""
-    return state.where(F.col("last_op") != LOG_DELETED).select("doc_id", "spans")

@@ -84,8 +84,8 @@ _NOREDIRECT_OPENER = urllib.request.build_opener(_NoRedirectHandler)
 
 USER_AGENT = "dataset-crawler-spark/0.3"
 
-#: mapInPandas output schema — matches simulated_fetcher's columns so
-#: CrawlEngine.crawl_round treats both fetchers identically (status-aware).
+#: mapInPandas output schema — the FetchFn contract (streaming/rounds.py),
+#: the same columns simulated_fetcher returns.
 FETCH_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind string, text string, media_ref string, offset int>>, "
@@ -261,8 +261,8 @@ def http_fetcher(
 
     ``scheduled`` is schedule_round's output (carries ``url_c``); the result
     has simulated_fetcher's exact shape (doc_id, spans, status, message), so
-    CrawlEngine.crawl_round's status-aware branch, ops_log rows, and
-    retry_frontier requeue work unchanged over real sockets.
+    CrawlEngine.crawl_round's ops_log rows and retry_frontier requeue work
+    unchanged over real sockets.
 
     ``max_workers`` bounds the per-task thread pool — with the politeness
     top-k already enforced upstream, total concurrency against any one host

@@ -1,1 +1,1 @@
-"""Round-based micro-batch orchestration + Structured Streaming operators."""
+"""The crawl round engine (rounds.py): schedule → fetch → diff → commit."""

@@ -1,10 +1,12 @@
 """Checkpoint-resumable crawl rounds — the engine's driver loop.
 
 Twin of the reference's ``multiple_run`` polling loop (App.java:31-58: claim a
-crawl_setups row → run → mark complete → sleep) restated as round-based
-micro-batches over the snapshot store: each round is one atomic commit of
-(lineage, versions) partitions tagged with ``crawl_id``
-(≈ the crawl_log row, CrawlDBOperations.java:258-285).
+crawl_setups row → run → mark complete → sleep) restated as rounds over the
+snapshot store: each round is one atomic commit of (lineage, versions)
+partitions tagged with ``crawl_id`` (≈ the crawl_log row,
+CrawlDBOperations.java:258-285). :meth:`CrawlEngine.crawl_round` is one round;
+callers loop it (the CLI's ``synthetic`` / ``refresh``), or
+:meth:`CrawlEngine.crawl_closure` loops it to link closure.
 
 State is purely log-structured: the diff input for round r is reconstructed
 from committed logs ≤ r-1 (operators/state.py) — exactly how the reference
@@ -16,7 +18,6 @@ idempotent.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 
@@ -42,10 +43,12 @@ STATE_SCHEMA = T.StructType(
     ]
 )
 
-#: fetch_fn(spark, scheduled_urls: DataFrame[url_c,...]) -> DataFrame[doc_id, spans]
-#: or, status-aware, DataFrame[doc_id, spans, status, message] where status ∈
-#: {success, error, exception, time_out} (CrawlerLogs.java:30-48 vocabulary);
-#: non-success rows are logged + retryable, excluded from the diff.
+#: fetch_fn(spark, scheduled: DataFrame[url_c, ...]) ->
+#: DataFrame[doc_id, spans, status, message], one row per scheduled URL (a URL
+#: with no row is logged as error). status is one of the OP_* values below
+#: (CrawlerLogs.java:30-48 vocabulary plus not_modified / redirect); only
+#: success rows reach the diff, the others are logged and, if failures,
+#: retryable. A conditional fetcher may add etag / last_modified columns.
 FetchFn = Callable[[SparkSession, DataFrame], DataFrame]
 
 #: per-operation status vocabulary (database_operations/CrawlerLogs.java:30-48)
@@ -288,28 +291,17 @@ class CrawlEngine:
 
         # Per-operation status log (K4 depth — CrawlerLogs.java:30-48 records
         # success/error/exception/time_out per request; 2M rows in the
-        # reference's production dump). One row per SCHEDULED URL: a
-        # status-aware fetcher reports its own outcomes; a legacy (doc_id,
-        # spans)-only fetcher gets success for returned docs and error for
-        # scheduled-but-missing ones. Scheduling metadata (seed_rank,
-        # priority, discovered_crawl_id) rides along so failures can re-enter
-        # the frontier with decayed priority (retry_frontier, T5).
-        status_aware = "status" in live_raw.columns
-        if status_aware:
-            outcome = live_raw.select(
-                F.col("doc_id").alias("url_c"),
-                F.col("status").alias("_status"),
-                (F.col("message") if "message" in live_raw.columns else F.lit(None).cast("string")).alias("_message"),
-            )
-            live = live_raw.where(F.col("status") == OP_SUCCESS).select("doc_id", "spans")
-        else:
-            outcome = live_raw.select(
-                F.col("doc_id").alias("url_c"),
-                F.lit(OP_SUCCESS).alias("_status"),
-                F.lit(None).cast("string").alias("_message"),
-            )
-            live = live_raw
-        live = live.cache()
+        # reference's production dump). One row per SCHEDULED URL, with the
+        # fetcher's own outcome; a scheduled URL the fetcher returned no row
+        # for logs as error. Scheduling metadata (seed_rank, priority,
+        # discovered_crawl_id) rides along so failures can re-enter the
+        # frontier with decayed priority (retry_frontier, T5).
+        outcome = live_raw.select(
+            F.col("doc_id").alias("url_c"),
+            F.col("status").alias("_status"),
+            F.col("message").alias("_message"),
+        )
+        live = live_raw.where(F.col("status") == OP_SUCCESS).select("doc_id", "spans").cache()
         n_fetched = live.count()
         ops_log = (
             sched.select("url_c", "host", "seed_rank", "priority", "discovered_crawl_id")
@@ -340,26 +332,24 @@ class CrawlEngine:
             # scheduler's seen filter dedups against history at schedule time.
             from dataset_crawler_spark.operators.discovery import expand_frontier
 
-            expand_input = live
-            if status_aware:
-                # surfaced 3xx targets ride the SAME discovery path: the
-                # redirect span (kind='redirect', media_ref=target) becomes a
-                # link span so extract_outlinks counts it toward in-link
-                # degree like any citation — a target redirected to from many
-                # URLs is prioritized exactly like a much-cited page
-                red = live_raw.where(F.col("status") == OP_REDIRECT).select(
-                    "doc_id",
-                    F.transform(
-                        "spans",
-                        lambda s: F.struct(
-                            F.lit("link").alias("kind"),
-                            s["text"].alias("text"),
-                            s["media_ref"].alias("media_ref"),
-                            s["offset"].alias("offset"),
-                        ),
-                    ).alias("spans"),
-                )
-                expand_input = live.unionByName(red)
+            # surfaced 3xx targets ride the SAME discovery path: the
+            # redirect span (kind='redirect', media_ref=target) becomes a
+            # link span so extract_outlinks counts it toward in-link degree
+            # like any citation — a target redirected to from many URLs is
+            # prioritized exactly like a much-cited page
+            red = live_raw.where(F.col("status") == OP_REDIRECT).select(
+                "doc_id",
+                F.transform(
+                    "spans",
+                    lambda s: F.struct(
+                        F.lit("link").alias("kind"),
+                        s["text"].alias("text"),
+                        s["media_ref"].alias("media_ref"),
+                        s["offset"].alias("offset"),
+                    ),
+                ).alias("spans"),
+            )
+            expand_input = live.unionByName(red)
             self.store.append(
                 "discovered", expand_frontier(expand_input, crawl_id), crawl_id
             )
@@ -379,7 +369,7 @@ class CrawlEngine:
             self.store.append("validators", vrows, crawl_id)
 
         live_for_diff = live
-        if conditional and status_aware and mode == "full":
+        if conditional and mode == "full":
             # full-snapshot semantics: a 304'd document was NOT refetched but
             # IS present and unchanged — its stored spans stand in so the
             # diff can never misread the missing body as a deletion
@@ -392,17 +382,15 @@ class CrawlEngine:
             )
             live_for_diff = live.unionByName(unchanged)
 
-        fetched = live.select(F.col("doc_id").alias("url_c"))
-        if status_aware:
-            # a redirecting URL is fully handled (target queued via the
-            # discovery path) — it joins the seen set so no later round
-            # spends budget re-fetching the hop; the chain's TERMINAL is
-            # what gets fetched and committed
-            fetched = fetched.unionByName(
-                live_raw.where(F.col("status") == OP_REDIRECT).select(
-                    F.col("doc_id").alias("url_c")
-                )
+        # a redirecting URL is fully handled (target queued via the
+        # discovery path) — it joins the seen set so no later round spends
+        # budget re-fetching the hop; the chain's TERMINAL is what gets
+        # fetched and committed
+        fetched = live.select(F.col("doc_id").alias("url_c")).unionByName(
+            live_raw.where(F.col("status") == OP_REDIRECT).select(
+                F.col("doc_id").alias("url_c")
             )
+        )
         self.store.append("fetched", fetched, crawl_id)
         if bloom_params is not None:
             prev_bloom = self.bloom_as_of(prev_round)
@@ -416,14 +404,10 @@ class CrawlEngine:
 
         n_not_modified = (
             int(live_raw.where(F.col("status") == OP_NOT_MODIFIED).count())
-            if (conditional and status_aware)
+            if conditional
             else 0
         )
-        n_redirected = (
-            int(live_raw.where(F.col("status") == OP_REDIRECT).count())
-            if status_aware
-            else 0
-        )
+        n_redirected = int(live_raw.where(F.col("status") == OP_REDIRECT).count())
         fetch_counts = {
             "scheduled": int(n_scheduled),
             "fetched": int(n_fetched),
@@ -573,27 +557,6 @@ class CrawlEngine:
                 break
         return out
 
-    # -- maintenance ---------------------------------------------------------
-
-    def compact_store(self, upto: int | None = None, vacuum: bool = True) -> dict:
-        """Compact every store table and (optionally) vacuum the superseded
-        round partitions — the periodic housekeeping a long-lived crawl runs
-        between rounds (a 10^4-round table is otherwise 10^4 small-file
-        directories per table). Byte-identical reads before/after is the
-        store's contract (sources/snapshots.py compact), so this can run at
-        ANY round boundary: resume, as-of reconstruction, and the next
-        round's seen-set reads are unaffected. Skips tables with no
-        committed data. Returns {table: compaction info}."""
-        out = {}
-        for t in self.store.tables():
-            try:
-                out[t] = self.store.compact(t, upto)
-            except (FileNotFoundError, ValueError):
-                continue
-            if vacuum:
-                out[t]["vacuumed"] = len(self.store.vacuum(t))
-        return out
-
     # -- failure retry (T5) + operation log reads ----------------------------
 
     def ops_log_as_of(self, as_of: int | None = None) -> DataFrame:
@@ -729,11 +692,10 @@ class CrawlEngine:
         (operators/graph.py opic_step — adaptive OPIC, WWW 2003): only the
         hosts the round actually visited (ops-log fetches that returned
         content or a 304) bank their cash and push it along the CURRENT
-        host graph's out-links. Cost per round ∝ |fetched| — the same
-        batch→incremental contract as the minhash/signlsh/substring/CC
-        standing indexes; a full :func:`~dataset_crawler_spark.operators.
-        graph.opic` recomputation is never needed. Appends the new
-        (host, cash, hist) state partition and returns it.
+        host graph's out-links. Cost per round ∝ |fetched|; a full
+        :func:`~dataset_crawler_spark.operators.graph.opic` recomputation is
+        never needed. Appends the new (host, cash, hist) state partition and
+        returns it.
 
         Bootstrap: the first update seeds every then-known host with cash
         1/n; hosts discovered later enter with cash 0 (conservation-safe —
@@ -892,154 +854,12 @@ class CrawlEngine:
             F.lit("pending").alias("state"),
         )
 
-    # -- dataset-metadata dimension (K2 engine path) -------------------------
-
-    def upsert_datasets(self, meta: DataFrame, crawl_id: int) -> None:
-        """Maintain the dataset-metadata dimension across rounds — the engine
-        twin of the reference's per-round metadata upsert
-        (CrawlDBOperations.java:36-80 UPDATE-else-INSERT, existence probe
-        :1341-1364). Log-structured: append this round's rows (e.g. from
-        sources/ckan.parse_ckan_packages); reads fold last-version-wins, so an
-        existing dataset_id is updated and a new one inserted — MERGE
-        semantics without a mutable table (Iceberg MERGE INTO on a cluster).
-        """
-        self.store.append(
-            "datasets", meta.withColumn("crawl_id", F.lit(crawl_id).cast("int")), crawl_id
-        )
-
-    def datasets_as_of(self, as_of: int | None = None) -> DataFrame:
-        """Current dataset dimension: one row per dataset_id, latest version
-        ≤ as_of (max_by over crawl_id — same fold as state reconstruction)."""
-        d = self.store.read("datasets", as_of=as_of)
-        attrs = [c for c in d.columns if c not in ("dataset_id", "crawl_id")]
-        folded = d.groupBy("dataset_id").agg(
-            *[F.max_by(c, "crawl_id").alias(c) for c in attrs],
-            F.max("crawl_id").alias("last_crawl_id"),
-        )
-        return folded
-
-
-def streaming_crawl_rounds(
-    engine: CrawlEngine,
-    frontier_stream_dir: str,
-    hosts: DataFrame,
-    fetch_fn: FetchFn,
-    checkpoint: str,
-    bloom_params: SN.BloomParams | None = None,
-    mode: str = "discover",
-    max_files_per_batch: int | None = None,
-    discover_links: bool = False,
-    feed_discoveries: bool = False,
-) -> None:
-    """Structured-Streaming bridge: frontier drops → crawl rounds.
-
-    ``discover_links`` records each round's outlink expansion in the
-    ``discovered`` table; ``feed_discoveries`` additionally writes those
-    rows back into ``frontier_stream_dir`` as a new drop, making the stream
-    SELF-FEEDING: each availableNow drain crawls one frontier generation,
-    and re-invoking continues from the checkpoint until the link closure is
-    reached (the streaming twin of :meth:`CrawlEngine.crawl_closure` — the
-    batch loop's round boundary becomes the micro-batch boundary).
-    Exactly-once still holds: the drop file is written from the committed
-    ``discovered`` partition AFTER the round commit, and a replayed batch
-    rewrites the same rows.
-
-    ``frontier_stream_dir`` is watched as a file-source stream (FRONTIER
-    schema); every micro-batch becomes ONE full crawl round via
-    ``foreachBatch`` — schedule → fetch → diff → atomic commit — with
-    ``Trigger.AvailableNow`` draining whatever drops are present and
-    stopping (the reference's poll-sleep ``multiple_run`` loop, App.java:
-    31-58, as a stream). Exactly-once round semantics come from composing
-    the streaming checkpoint (a batch replays after a crash) with the
-    engine's idempotent round commit (a replayed round overwrites its own
-    partitions and re-commits the same manifest entry) — re-running a batch
-    cannot double-apply it. Call again after new drops land to continue from
-    the checkpoint.
-    """
-    from dataset_crawler_spark.schemas import FRONTIER
-
-    reader = engine.spark.readStream.schema(FRONTIER)
-    if max_files_per_batch is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.parquet(frontier_stream_dir)
-
-    # Pins are scoped to THIS checkpoint: batch ids restart at 0 under a new
-    # checkpoint dir, and an unscoped pin would hand a fresh stream round 0's
-    # id — overwriting committed history instead of appending a new round.
-    import hashlib
-
-    ckpt_ns = hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-
-    def _crawl_id_for_batch(batch_id: int) -> int:
-        # Pin batch_id → crawl_id on first sight so a batch replayed after a
-        # crash-between-commit-and-checkpoint reuses its ORIGINAL round id:
-        # the replay then overwrites the same partitions / manifest entry /
-        # feed drop instead of being applied as a second round. Written
-        # atomically (tmp + rename) before the round runs.
-        bdir = os.path.join(engine.store.root, "_stream_batches")
-        os.makedirs(bdir, exist_ok=True)
-        path = os.path.join(bdir, f"{ckpt_ns}-{batch_id}.txt")
-        if os.path.exists(path):
-            with open(path) as fh:
-                return int(fh.read())
-        crawl_id = engine.next_round()
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(crawl_id))
-        os.replace(tmp, path)
-        return crawl_id
-
-    def one_round(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        crawl_id = _crawl_id_for_batch(batch_id)
-        stats = engine.crawl_round(
-            batch_df,
-            hosts,
-            fetch_fn,
-            crawl_id,
-            bloom_params=bloom_params,
-            description=f"stream batch {batch_id}",
-            mode=mode,
-            discover_links=discover_links or feed_discoveries,
-        )
-        if feed_discoveries and stats["scheduled"] > 0:
-            # stage the drop outside the watched dir (file sources skip
-            # nested dirs and _-prefixed paths), then move the part file in
-            # under a deterministic name ⇒ a replayed batch overwrites the
-            # same drop; the NEXT availableNow invocation picks it up
-            import glob
-            import shutil
-
-            stage = os.path.join(engine.store.root, "_stream_feed", str(crawl_id))
-            engine.discovered_frontier(crawl_id).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            parts = glob.glob(os.path.join(stage, "part-*.parquet"))
-            if not parts:
-                # a 0-partition discovery writes no part file — nothing to feed
-                return
-            if len(parts) > 1:  # coalesce(1) guarantees one data file
-                raise RuntimeError(f"expected one part file in {stage}, got {parts}")
-            shutil.move(
-                parts[0],
-                os.path.join(frontier_stream_dir, f"discovered-{crawl_id}.parquet"),
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(one_round)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.awaitTermination()
-
 
 def simulated_fetcher(corpus: DataFrame) -> FetchFn:
     """A deterministic stand-in for the HTTP fetch stage: scheduled URLs are
-    joined against a given corpus (doc_id == canonical url). Status-aware:
-    scheduled URLs absent from the corpus come back as ``error`` rows (the
-    404 path), so the ops log and retry machinery see real failures. The
+    joined against a given corpus (doc_id == canonical url). Scheduled URLs
+    absent from the corpus come back as ``error`` rows (the 404 path), so the
+    ops log and retry machinery see real failures. The
     PRODUCTION fetcher with the same signature is
     ``sources/http_fetch.http_fetcher`` — a ``mapInPandas`` HTTP stage
     emitting success/error/exception/time_out per request, exercised over a

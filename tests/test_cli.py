@@ -27,6 +27,22 @@ def test_cli_synthetic_backcompat(spark, tmp_path, capsys):
     assert line["round"] == 0 and line["fetched"] > 0
 
 
+def test_cli_synthetic_appends_rounds_to_existing_store(spark, tmp_path, capsys):
+    # a second run on the same store continues at the next round instead of
+    # overwriting round 0
+    store = str(tmp_path / "s")
+    args = ["--rounds", "1", "--n-urls", "2000", "--n-hosts", "10", "--store", store]
+    assert main(args) == 0
+    assert main(args) == 0
+    rounds = [json.loads(x)["round"] for x in capsys.readouterr().out.strip().splitlines()]
+    assert rounds == [0, 1]
+    st = SnapshotStore(store, spark)
+    assert st.committed_rounds() == [0, 1]
+    fetched = [{r.url_c for r in st.read("fetched").where(F.col("crawl_id") == rid).collect()}
+               for rid in (0, 1)]
+    assert fetched[0] and not (fetched[0] & fetched[1])  # round 1 saw round 0's seen set
+
+
 def test_cli_crawl_live(spark, tmp_path, server, capsys):
     store = str(tmp_path / "live")
     rc = main([

@@ -36,25 +36,31 @@ def collect_lineage(lineage_df):
     return out
 
 
-def run_engine_rounds(spark, rounds, resurrect=False):
-    state = empty_state(spark)
-    all_lineage, all_versions = [], []
-    per_round = []
-    for rnd in rounds:
-        live = datagen.documents_for_round_local(spark, N_DOCS, rnd, n_hosts=N_HOSTS)
+def chain_rounds(spark, lives, resurrect=False):
+    """Diff each round's live snapshot against the state the engine folds
+    from the accumulated logs (``S.state_table_as_of``, as
+    ``CrawlEngine.state_as_of`` does). Yields (lineage, lineage ∪ earlier,
+    versions ∪ earlier) per round."""
+    lin = ver = None
+    for rnd, live in enumerate(lives):
+        state = empty_state(spark) if lin is None else S.state_table_as_of(lin, ver, rnd - 1)
         lineage = D.snapshot_diff(state, live, rnd, resurrect=resurrect).cache()
+        versions = S.versions_from_round(live, lineage, rnd)
+        lin = lineage if lin is None else lin.unionByName(lineage)
+        ver = versions if ver is None else ver.unionByName(versions)
+        yield lineage, lin, ver
+
+
+def run_engine_rounds(spark, rounds, resurrect=False):
+    lives = [datagen.documents_for_round_local(spark, N_DOCS, rnd, n_hosts=N_HOSTS) for rnd in rounds]
+    per_round = []
+    for lineage, lin, ver in chain_rounds(spark, lives, resurrect=resurrect):
         per_round.append(collect_lineage(lineage))
-        all_lineage.append(lineage)
-        all_versions.append(S.versions_from_round(live, lineage, rnd))
-        state = D.apply_diff(state, live, lineage, rnd).cache()
-        state.count()  # materialize to keep plans shallow
-    lin = all_lineage[0]
-    for x in all_lineage[1:]:
-        lin = lin.unionByName(x)
-    ver = all_versions[0]
-    for x in all_versions[1:]:
-        ver = ver.unionByName(x)
-    return state, per_round, lin, ver
+    return per_round, lin, ver
+
+
+def visible(df):
+    return {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in df.collect()}
 
 
 def run_oracle_rounds(rounds, resurrect=False):
@@ -70,8 +76,8 @@ def test_diff_random_corpora_match_oracle_hypothesis(spark):
     """Adversarial property test: random multi-round corpora — duplicate
     spans (multi-valued properties), permuted array-vs-offset order, null
     text/media, empty span lists, doc appearance/disappearance/resurrection —
-    through the REAL snapshot_diff/apply_diff chain must produce lineage
-    identical to the pure-Python oracle in both tombstone modes."""
+    through the REAL snapshot_diff / state_table_as_of chain must produce
+    lineage identical to the pure-Python oracle in both tombstone modes."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -108,21 +114,19 @@ def test_diff_random_corpora_match_oracle_hypothesis(spark):
     @given(rounds=rounds_strategy, resurrect=st.booleans())
     def check(rounds, resurrect):
         oracle = CrawlerOracle(resurrect=resurrect)
-        state = empty_state(spark)
-        for rnd, live in enumerate(rounds):
-            lineage = D.snapshot_diff(state, to_df(live), rnd, resurrect=resurrect).cache()
+        lives = [to_df(live) for live in rounds]
+        chain = chain_rounds(spark, lives, resurrect=resurrect)
+        for rnd, (live, (lineage, _, _)) in enumerate(zip(rounds, chain)):
             got = collect_lineage(lineage)
             want = oracle.run_round(live, rnd)
             assert got == want, f"round {rnd} resurrect={resurrect}"
-            state = D.apply_diff(state, to_df(live), lineage, rnd).cache()
-            state.count()
 
     check()
 
 
 @pytest.mark.parametrize("resurrect", [False, True])
 def test_lineage_matches_oracle(spark, resurrect):
-    _, engine_rounds, _, _ = run_engine_rounds(spark, [0, 1, 2], resurrect=resurrect)
+    engine_rounds, _, _ = run_engine_rounds(spark, [0, 1, 2], resurrect=resurrect)
     _, oracle_rounds = run_oracle_rounds([0, 1, 2], resurrect=resurrect)
     for rnd, (got, want) in enumerate(zip(engine_rounds, oracle_rounds)):
         assert set(got) == set(want), f"round {rnd}: doc sets differ"
@@ -131,40 +135,31 @@ def test_lineage_matches_oracle(spark, resurrect):
 
 
 def test_final_state_span_sequences_match(spark):
-    state, _, _, _ = run_engine_rounds(spark, [0, 1, 2])
+    _, lineage, versions = run_engine_rounds(spark, [0, 1, 2])
     oracle, _ = run_oracle_rounds([0, 1, 2])
-    got = {
-        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in D.current_docs(state).collect()
-    }
-    want = oracle.visible_docs()
-    assert got == want  # per-row invariant: span-sequence equality
+    # per-row invariant: span-sequence equality
+    assert visible(S.reconstruct_as_of(lineage, versions, 2)) == oracle.visible_docs()
 
 
 def test_diff_self_is_empty(spark):
     live = datagen.documents_for_round_local(spark, N_DOCS, 0, n_hosts=N_HOSTS)
-    state0 = D.apply_diff(
-        empty_state(spark), live, D.snapshot_diff(empty_state(spark), live, 0), 0
-    )
+    lineage0 = D.snapshot_diff(empty_state(spark), live, 0)
+    state0 = S.state_table_as_of(lineage0, S.versions_from_round(live, lineage0, 0), 0)
     again = D.snapshot_diff(state0, live, 1)
     assert again.count() == 0
 
 
 def test_reconstruction_equals_incremental_state(spark):
-    state, _, lineage, versions = run_engine_rounds(spark, [0, 1, 2])
-    rebuilt = S.reconstruct_as_of(lineage, versions, 2)
-    incremental = D.current_docs(state)
-    sym_diff = rebuilt.exceptAll(incremental).unionByName(incremental.exceptAll(rebuilt))
-    assert sym_diff.count() == 0
-    # as-of round 1 equals an oracle stopped at round 1
-    o1 = CrawlerOracle()
-    for rnd in (0, 1):
-        o1.run_round(dict(datagen.documents_for_round_py(N_DOCS, rnd, n_hosts=N_HOSTS)), rnd)
-    got1 = {
-        r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans]
-        for r in S.reconstruct_as_of(lineage, versions, 1).collect()
-    }
-    assert got1 == o1.visible_docs()
+    """At every round, the visible part of the state the next diff reads
+    (state_table_as_of) equals the as-of snapshot (reconstruct_as_of), and
+    both equal an oracle stopped at that round."""
+    _, lineage, versions = run_engine_rounds(spark, [0, 1, 2])
+    oracle = CrawlerOracle()
+    for rnd in (0, 1, 2):
+        oracle.run_round(dict(datagen.documents_for_round_py(N_DOCS, rnd, n_hosts=N_HOSTS)), rnd)
+        state = S.state_table_as_of(lineage, versions, rnd).where(F.col("last_op") != "deleted")
+        rebuilt = S.reconstruct_as_of(lineage, versions, rnd)
+        assert visible(state) == visible(rebuilt) == oracle.visible_docs(), f"as_of={rnd}"
 
 
 def test_span_ops_narrow_explode_parity(spark):
@@ -214,7 +209,7 @@ def test_span_ops_narrow_explode_parity(spark):
 
 def test_tombstone_resurrection_semantics(spark):
     """Faithful mode: resurrected docs emit no lineage and stay invisible."""
-    _, engine_rounds, _, _ = run_engine_rounds(spark, [0, 1, 2], resurrect=False)
+    engine_rounds, _, _ = run_engine_rounds(spark, [0, 1, 2], resurrect=False)
     r0, r1, r2 = engine_rounds
     deleted_r1 = {d for d, (op, _) in r1.items() if op == "deleted"}
     live_r2 = {d for d, _ in datagen.documents_for_round_py(N_DOCS, 2, n_hosts=N_HOSTS)}

@@ -356,61 +356,6 @@ def test_robots_and_sitemaps_over_http(spark, server):
     fetched.unpersist()
 
 
-def test_streaming_self_feeding_closure_over_http(spark, tmp_path, server):
-    """The full composition over REAL sockets: frontier-drop stream →
-    schedule → mapInPandas HTTP fetch → outlink discovery → self-feeding
-    drop for the next drain. Reaches the same BFS closure as the
-    simulated-fetcher twin (test_streaming) with every page fetched exactly
-    once, and the drained final invocation commits nothing."""
-    import glob as globmod
-    import shutil
-
-    from dataset_crawler_spark.operators import seen as SN
-    from dataset_crawler_spark.streaming.rounds import (
-        CrawlEngine,
-        streaming_crawl_rounds,
-    )
-
-    def u(name):
-        return f"{server}/link/{name}"
-
-    hosts = spark.createDataFrame(
-        [("127.0.0.1", 0, 100, [], True)],
-        "host string, crawl_delay_ms int, max_fetch_per_round int, "
-        "robots_disallow array<string>, is_available boolean",
-    )
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    spark.createDataFrame(
-        [(u("a"), None, 1.0, 0, 0, "pending")],
-        "url string, host string, priority double, discovered_crawl_id int, "
-        "seed_rank int, state string",
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "seed_stage"))
-    (part,) = globmod.glob(str(tmp_path / "seed_stage" / "part-*.parquet"))
-    shutil.move(part, str(stream_dir / "seeds.parquet"))
-
-    eng = CrawlEngine(spark, str(tmp_path / "store"))
-    params = SN.BloomParams.for_capacity(64, fp_rate=0.01, n_shards=4)
-    for _ in range(6):
-        before = eng.store.last_round()
-        streaming_crawl_rounds(
-            eng, str(stream_dir), hosts, http_fetcher(timeout_s=5.0),
-            checkpoint=str(tmp_path / "ckpt"), bloom_params=params,
-            feed_discoveries=True,
-        )
-        if eng.store.last_round() == before:
-            break  # drained — streaming closure
-    fetched = sorted(r.url_c for r in eng.store.read("fetched").collect())
-    assert fetched == sorted({u(n) for n in "abcd"})  # e is unreachable
-    per_round = [r["stats"]["fetched"] for r in eng.store.manifest()["rounds"]]
-    assert per_round == [1, 2, 1]  # BFS generations, each page exactly once
-    # fetched content is the live server's, spans in order
-    row = eng.store.read("versions").where(F.col("doc_id") == u("b")).collect()[0]
-    assert [(s.kind, s.media_ref) for s in row.spans] == [
-        ("link", u("c")), ("link", u("d")), ("text", None)
-    ]
-
-
 # -- conditional GET: ETag / If-Modified-Since revalidation -------------------
 
 

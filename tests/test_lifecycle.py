@@ -311,73 +311,6 @@ def test_endpoint_probe_gates_hosts_and_logs_status(spark, tmp_path):
     assert a == b
 
 
-def test_dataset_dimension_upserts_across_rounds(spark, tmp_path):
-    """K2 engine path: the datasets dimension is maintained round-over-round
-    with MERGE semantics (update-if-exists-else-insert,
-    CrawlDBOperations.java:36-80) and is time-travelable."""
-    eng = CrawlEngine(spark, str(tmp_path / "store"))
-    meta0 = spark.createDataFrame(
-        [("ds1", "Title One", "https://a.example.org/sparql"),
-         ("ds2", "Title Two", None)],
-        "dataset_id string, title string, endpoint_url string",
-    )
-    eng.upsert_datasets(meta0, 0)
-    eng.store.commit_round(0)
-    meta1 = spark.createDataFrame(
-        [("ds2", "Title Two v2", "https://b.example.org/sparql"),  # update
-         ("ds3", "Title Three", None)],  # insert
-        "dataset_id string, title string, endpoint_url string",
-    )
-    eng.upsert_datasets(meta1, 1)
-    eng.store.commit_round(1)
-
-    dim = {r.dataset_id: (r.title, r.endpoint_url, r.last_crawl_id)
-           for r in eng.datasets_as_of(1).collect()}
-    assert dim == {
-        "ds1": ("Title One", "https://a.example.org/sparql", 0),   # carried
-        "ds2": ("Title Two v2", "https://b.example.org/sparql", 1),  # updated
-        "ds3": ("Title Three", None, 1),                            # inserted
-    }
-    dim0 = {r.dataset_id: r.title for r in eng.datasets_as_of(0).collect()}
-    assert dim0 == {"ds1": "Title One", "ds2": "Title Two"}  # as-of read
-
-
-def test_compaction_mid_lifecycle_is_transparent(spark, tmp_path):
-    """compact_store() at a round boundary must not change anything the
-    engine computes afterwards: a compacted engine and an untouched twin
-    running the identical 3-round crawl end with the same fetched sets,
-    visible docs, and as-of reconstructions."""
-    params = SN.BloomParams.for_capacity(N_DOCS, fp_rate=0.01, n_shards=8)
-    frontier, hosts = _frontier(spark), _open_hosts(spark)
-    a = CrawlEngine(spark, str(tmp_path / "a"))
-    b = CrawlEngine(spark, str(tmp_path / "b"))
-
-    for rnd in range(2):
-        live = _live_frontier(spark, rnd)
-        for eng in (a, b):
-            eng.crawl_round(live, hosts, simulated_fetcher(_corpus(spark, rnd)), rnd,
-                            bloom_params=params, mode="full")
-
-    info = b.compact_store()
-    assert info  # at least the lineage/versions/fetched tables compacted
-    assert all(v.get("vacuumed", 0) >= 1 for v in info.values())
-
-    live2 = _live_frontier(spark, 2)
-    for eng in (a, b):
-        eng.crawl_round(live2, hosts, simulated_fetcher(_corpus(spark, 2)), 2,
-                        bloom_params=params, mode="full")
-
-    for as_of in (0, 1, 2):
-        va = {tuple(sorted(map(tuple, r.spans))) + (r.doc_id,)
-              for r in a.visible_docs(as_of).collect()}
-        vb = {tuple(sorted(map(tuple, r.spans))) + (r.doc_id,)
-              for r in b.visible_docs(as_of).collect()}
-        assert va == vb, f"as_of={as_of}"
-        fa = {r.url_c for r in a.store.read("fetched", as_of=as_of).collect()}
-        fb = {r.url_c for r in b.store.read("fetched", as_of=as_of).collect()}
-        assert fa == fb, f"as_of={as_of}"
-
-
 def test_refresh_frontier_ranks_changed_docs_first(spark, tmp_path):
     """After two full rounds, refresh_frontier must rank by change history:
     docs changed in round 1 (score 0.5·decay⁰ from r0 + 1.0 from r1 = 1.5)

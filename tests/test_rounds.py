@@ -36,87 +36,6 @@ def test_rounds_commit_and_match_oracle(spark, tmp_path):
     assert _visible(eng, as_of=0) == o0.visible_docs()
 
 
-def test_compaction_preserves_asof_reads(spark, tmp_path):
-    """compact() + vacuum() must leave every as-of read byte-identical:
-    rows ≤ the compaction point move from partition pruning to a row filter
-    on the preserved crawl_id data column, later rounds stay partitioned;
-    re-compaction after further appends keeps the invariant."""
-    import os
-
-    from dataset_crawler_spark.sources.snapshots import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "store"), spark)
-    for rnd in range(3):
-        df = spark.createDataFrame(
-            [(f"u{rnd}_{i}", rnd * 10 + i) for i in range(5)], "url_c string, x int"
-        )
-        store.append("t", df, rnd)
-        store.commit_round(rnd)
-
-    def snap(as_ofs=(0, 1, 2, None)):
-        return {
-            a: sorted(tuple(r) for r in store.read("t", as_of=a).collect())
-            for a in as_ofs
-        }
-
-    before = snap()
-    assert len(before[None]) == 15
-
-    store.compact("t", upto=1)
-    assert snap() == before
-    removed = store.vacuum("t")
-    assert any(p.endswith("crawl_id=0") for p in removed)
-    assert any(p.endswith("crawl_id=1") for p in removed)
-    assert not any(p.endswith("crawl_id=2") for p in removed)
-    assert snap() == before
-
-    # keep appending after compaction, then compact everything
-    store.append(
-        "t", spark.createDataFrame([("z", 99)], "url_c string, x int"), 3
-    )
-    store.commit_round(3)
-    with_r3 = snap()
-    assert len(with_r3[None]) == 16
-    assert {a: with_r3[a] for a in (0, 1, 2)} == {a: before[a] for a in (0, 1, 2)}
-
-    store.compact("t")
-    store.vacuum("t")
-    assert snap() == with_r3
-    # everything now lives in exactly one compacted dir
-    base = str(tmp_path / "store" / "t")
-    assert sorted(os.listdir(base)) == ["_compacted_3"]
-
-
-def test_compaction_crash_leaves_orphan_invisible(spark, tmp_path):
-    """Crash between writing the compacted directory and the manifest switch:
-    the orphan dir must be ignored by reads (manifest is the commit point),
-    and a later successful compaction's vacuum must clean it up."""
-    import os
-
-    from dataset_crawler_spark.sources.snapshots import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "store"), spark)
-    for rnd in range(2):
-        df = spark.createDataFrame([(f"u{rnd}", rnd)], "url_c string, x int")
-        store.append("t", df, rnd)
-        store.commit_round(rnd)
-    before = sorted(tuple(r) for r in store.read("t").collect())
-
-    # simulate the crash: compacted data lands, manifest never switches
-    store.read("t").where("crawl_id <= 0").write.parquet(
-        str(tmp_path / "store" / "t" / "_compacted_0")
-    )
-    assert store.compacted_upto("t") is None
-    assert sorted(tuple(r) for r in store.read("t").collect()) == before
-
-    # a later real compaction supersedes and vacuums the orphan
-    store.compact("t", upto=1)
-    removed = store.vacuum("t")
-    assert any(p.endswith("_compacted_0") for p in removed)
-    assert sorted(tuple(r) for r in store.read("t").collect()) == before
-    assert sorted(os.listdir(str(tmp_path / "store" / "t"))) == ["_compacted_1"]
-
-
 def test_resume_after_crash_is_byte_equal(spark, tmp_path):
     # uninterrupted run
     full = CrawlEngine(spark, str(tmp_path / "full"))
