@@ -67,7 +67,6 @@ def _engine(args):
 def run_synthetic(args) -> int:
     from dataset_crawler_spark import datagen
     from dataset_crawler_spark.operators import seen as SN
-    from dataset_crawler_spark.sources import probe as PR
     from dataset_crawler_spark.streaming.rounds import simulated_fetcher
 
     spark, store, eng = _engine(args)
@@ -78,20 +77,14 @@ def run_synthetic(args) -> int:
 
     for _ in range(args.rounds):
         rid = eng.next_round()
-        extra_ops = None
-        round_hosts = hosts
-        if args.probe_endpoints:
-            round_hosts = PR.probe_hosts(hosts)
-            extra_ops = PR.probe_ops_rows(round_hosts, rid)
         stats = eng.crawl_round(
             frontier,
-            round_hosts,
+            hosts,
             simulated_fetcher(datagen.documents_for_round(spark, n_docs, rid,
                                                           n_hosts=args.n_hosts)),
             rid,
             bloom_params=params,
             mode=args.mode,
-            extra_ops=extra_ops,
         )
         print(json.dumps({"round": rid, "store": store, **stats}))
     return 0
@@ -156,6 +149,7 @@ def run_crawl(args) -> int:
         if args.conditional
         else http_fetcher(timeout_s=args.timeout, follow_redirects=follow)
     )
+    first = eng.next_round()  # crawl_closure resumes an existing store here
     stats = eng.crawl_closure(
         seeds,
         dim,
@@ -167,7 +161,7 @@ def run_crawl(args) -> int:
         conditional=args.conditional,
         centrality=args.centrality,
     )
-    for rnd, s in enumerate(stats):
+    for rnd, s in enumerate(stats, start=first):
         print(json.dumps({"round": rnd, "store": store, **s}))
     return 0
 
@@ -290,8 +284,6 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("--n-urls", type=int, default=20_000)
     ps.add_argument("--n-hosts", type=int, default=50)
     ps.add_argument("--mode", choices=["discover", "full"], default="discover")
-    ps.add_argument("--probe-endpoints", action="store_true",
-                    help="run the availability probe stage before each round")
     ps.set_defaults(fn=run_synthetic)
 
     pc = sub.add_parser("crawl", help="live crawl from seed URLs (robots + HTTP fetch)")

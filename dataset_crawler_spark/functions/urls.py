@@ -11,75 +11,28 @@ canonicalizer:
 5. strip trailing slashes from non-root paths (all of them — the
    canonical form must be a fixed point: canon(canon(u)) == canon(u))
 
-Three twin implementations of the SAME spec (parity-tested):
+Two twin implementations of the SAME spec (parity-tested):
 
 - ``canonicalize_url`` — pure built-in expressions (regexp_extract/lower/
-  array_sort), stays inside WholeStageCodegen: the hot path. No Python at all
-  beats "vectorized Python" — an Arrow round-trip of 10^10 URLs is the single
-  biggest avoidable cost in the frontier pipeline.
-- ``canonicalize_url_pandas`` — vectorized pandas UDF (Arrow batches, no
-  per-row Python), kept as the extension point for canonicalization rules a
-  SQL regex can't express (IDN/punycode, %-decoding tables).
+  array_sort), stays inside WholeStageCodegen: the engine's only
+  canonicalizer. No Python at all beats "vectorized Python" — an Arrow
+  round-trip of 10^10 URLs is the single biggest avoidable cost in the
+  frontier pipeline.
 - ``canonicalize_url_py`` — pure-Python twin feeding the crawler oracle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _URL_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/:?#]+)(:[0-9]+)?([^?#]*)(\?[^#]*)?(#.*)?$"
-
-
-def _canon_series(s: pd.Series) -> pd.Series:
-    parts = s.str.extract(_URL_RE)
-    scheme = parts[0].str.lower()
-    host = parts[1].str.lower()
-    port = parts[2]
-    path = parts[3].fillna("")
-    query = parts[4].fillna("")
-
-    default_port = ((scheme == "http") & (port == ":80")) | (
-        (scheme == "https") & (port == ":443")
-    )
-    port = port.where(~default_port, "").fillna("")
-
-    # strip ALL trailing slashes off non-root paths (vectorized, idempotent)
-    path = path.str.replace(r"/+$", "", regex=True)
-    path = path.where(path != "", "/")
-
-    # sort query params — only rows that actually have >1 param leave the
-    # vectorized path (batch-level .map, still inside one Arrow batch)
-    multi = query.str.contains("&", regex=False)
-    if multi.any():
-        sorted_q = query[multi].map(lambda q: "?" + "&".join(sorted(q[1:].split("&"))))
-        query = query.copy()
-        query[multi] = sorted_q
-
-    out = scheme + "://" + host + port + path + query
-    # unparseable urls pass through unchanged (reference: identity fallback)
-    return out.where(parts[0].notna(), s)
-
-
-_canon_udf = None
-
-
-def canonicalize_url_pandas(col: Column | str) -> Column:
-    """Vectorized pandas-UDF canonicalizer (UDF built lazily —
-    pandas_udf return-type parsing needs an active SparkSession)."""
-    global _canon_udf
-    if _canon_udf is None:
-        _canon_udf = pandas_udf(_canon_series, "string")
-    c = F.col(col) if isinstance(col, str) else col
-    return _canon_udf(c)
 
 
 def canonicalize_url(col: Column | str) -> Column:
     """Canonicalizer as pure built-in expressions (WholeStageCodegen hot path).
 
-    Byte-identical to :func:`canonicalize_url_py` / the pandas twin; parity is
+    Byte-identical to :func:`canonicalize_url_py`; parity is
     pinned by tests/test_scheduler.py::test_canonicalizer_parity.
 
     Deliberately uses one ``regexp_extract`` per field rather than a clever

@@ -22,13 +22,16 @@ matched in ascending ``offset`` order (deterministic twin of the reference's
 any-to-any hash matching for multi-valued properties, :535-563). Unmatched
 existing occurrences → span op ``deleted``; unmatched live → ``added``.
 
-Scale notes (100 TB frontier):
+Scale notes:
 - one full-outer shuffle on ``doc_id`` (both sides hash-partitioned by the
   join key; AQE handles skew) — the fingerprint gate keeps the expensive
   span explode/join to the changed minority (~10-30% of docs per round).
 - everything is built-in columnar expressions (fingerprints via
-  ``transform``/``aggregate``, occurrence matching via window + sort-merge
-  join) — zero Python on executors, full WholeStageCodegen coverage.
+  ``xxhash64(to_json(spans))``, occurrence matching via window + sort-merge
+  join) — zero Python on executors. Per-span work avoids higher-order-function
+  lambdas, which Spark evaluates interpreted, outside WholeStageCodegen: an
+  array-lambda span diff that skipped the shuffle measured ~37× slower than
+  this path (30 docs of up to 300 spans, 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -57,88 +60,15 @@ def _lineage_row(op_col, span_ops_col):
     ]
 
 
-#: docs with at most this many spans diff via narrow array expressions (no
-#: shuffle); larger docs take the explode/shuffle path. Default 0 = explode
-#: for everything: measured at 100k docs / local[32], the explode path wins
-#: (2.0s vs 3.1s) because Spark evaluates higher-order-function lambdas
-#: interpreted (no codegen), which costs more than the 4 extra shuffles at
-#: this scale. The narrow path is kept (parity-tested) for deployments where
-#: shuffle is the scarce resource (wide clusters, slow network) — set this
-#: to e.g. 256 to enable the hybrid.
-NARROW_DIFF_MAX_SPANS = 0
-
-
-def _span_occ_tagged(spans):
-    """array<struct<h,offset,kind>> with h = span identity hash tagged by
-    occurrence rank: the i-th occurrence of an identical (kind,text,media_ref)
-    gets occ=i (ascending offset = array order), so multiset matching is
-    equality on (h, occ) — the deterministic twin of the reference's
-    any-to-any value-hash matching (CrawlOperations.java:535-563)."""
-    hashed = F.transform(
-        spans,
-        lambda s: F.struct(
-            F.xxhash64(
-                F.coalesce(s["kind"], F.lit(NULL_SENTINEL)),
-                F.coalesce(s["text"], F.lit(NULL_SENTINEL)),
-                F.coalesce(s["media_ref"], F.lit(NULL_SENTINEL)),
-            ).alias("h"),
-            s["offset"].alias("offset"),
-            s["kind"].alias("kind"),
-        ),
-    )
-    # occ = how many earlier array slots carry the same identity hash
-    return F.transform(
-        hashed,
-        lambda x, i: F.struct(
-            x["h"].alias("h"),
-            F.size(F.filter(F.slice(hashed, 1, i + 1), lambda y: y["h"] == x["h"]))
-            .alias("occ"),
-            x["offset"].alias("offset"),
-            x["kind"].alias("kind"),
-        ),
-    )
-
-
-def span_ops_narrow(prev_spans, live_spans):
-    """Span-op array for one doc as pure array expressions (no shuffle).
-
-    Returns array<struct<kind,offset,op>> sorted by (offset, op, kind) —
-    byte-identical to the explode path / the pure-Python oracle."""
-    by_offset = lambda arr: F.array_sort(  # noqa: E731 — occ ranks are defined
-        arr, lambda a, b: a["offset"].cast("int") - b["offset"].cast("int")
-    )  # by ascending offset, not array order (matches the explode path window)
-    p = _span_occ_tagged(by_offset(prev_spans))
-    l = _span_occ_tagged(by_offset(live_spans))
-    deleted = F.filter(
-        p, lambda x: ~F.exists(l, lambda y: (y["h"] == x["h"]) & (y["occ"] == x["occ"]))
-    )
-    added = F.filter(
-        l, lambda x: ~F.exists(p, lambda y: (y["h"] == x["h"]) & (y["occ"] == x["occ"]))
-    )
-    tag = lambda arr, op: F.transform(  # noqa: E731
-        arr,
-        lambda x: F.struct(
-            x["offset"].alias("offset"), F.lit(op).alias("op"), x["kind"].alias("kind")
-        ),
-    )
-    raw = F.array_sort(F.concat(tag(added, LOG_ADDED), tag(deleted, LOG_DELETED)))
-    return F.transform(
-        raw,
-        lambda x: F.struct(
-            x["kind"].alias("kind"), x["offset"].alias("offset"), x["op"].alias("op")
-        ),
-    )
-
-
 def span_ops_for_changed(changed: DataFrame) -> DataFrame:
     """Per-kind occurrence diff for docs whose fingerprint changed.
 
     ``changed``: (doc_id, prev_spans, live_spans). Returns
     (doc_id, span_ops) with span_ops sorted by (offset, op, kind).
 
-    Explode/shuffle formulation — the scale path for pathological documents
-    with huge span counts; :func:`span_ops_narrow` handles the common case
-    without any shuffle (see :func:`snapshot_diff`).
+    Explode/shuffle formulation: occurrence ranks come from a window and
+    matching is a sort-merge join; the one lambda left reorders the fields
+    of each op of a changed doc.
     """
     def side(col: str):
         s = changed.select("doc_id", F.explode(col).alias("s")).select(
@@ -244,28 +174,8 @@ def snapshot_diff(
     changed = j.where(
         in_prev & in_live & ~tombstoned & (F.col("prev_fp") != F.col("live_fp"))
     ).select("doc_id", "crawl_id", "prev_spans", "live_spans")
-    # Span diff: explode/shuffle by default (measured fastest — see
-    # NARROW_DIFF_MAX_SPANS); optional hybrid routes small docs through the
-    # shuffle-free narrow array-expression path. Both subtrees hang off the
-    # same full-outer exchange (AQE stage reuse).
-    if NARROW_DIFF_MAX_SPANS <= 0:
-        ops = span_ops_for_changed(changed)
-        updated = changed.join(ops, "doc_id", "left").select(
-            *_lineage_row(F.lit(LOG_UPDATED), F.coalesce(F.col("span_ops"), _empty_span_ops()))
-        )
-        return added.unionByName(deleted).unionByName(updated)
-    is_small = (F.size("prev_spans") <= NARROW_DIFF_MAX_SPANS) & (
-        F.size("live_spans") <= NARROW_DIFF_MAX_SPANS
-    )
-    updated_small = changed.where(is_small).select(
-        *_lineage_row(
-            F.lit(LOG_UPDATED), span_ops_narrow(F.col("prev_spans"), F.col("live_spans"))
-        )
-    )
-    big = changed.where(~is_small)
-    ops = span_ops_for_changed(big)
-    updated_big = big.join(ops, "doc_id", "left").select(
+    ops = span_ops_for_changed(changed)
+    updated = changed.join(ops, "doc_id", "left").select(
         *_lineage_row(F.lit(LOG_UPDATED), F.coalesce(F.col("span_ops"), _empty_span_ops()))
     )
-    return added.unionByName(deleted).unionByName(updated_small).unionByName(updated_big)
-
+    return added.unionByName(deleted).unionByName(updated)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from dataset_crawler_spark.functions.urls import canonicalize_url, host_of
 from dataset_crawler_spark.operators import seen as SN
+from dataset_crawler_spark.schemas import OP_NOT_MODIFIED, OP_REDIRECT, OP_SUCCESS
 
 DEFAULT_N_SALT = 16
 
@@ -225,7 +226,7 @@ def adaptive_host_budgets(
             # fetch failures count against a host
             F.sum(
                 (
-                    ~F.col("status").isin("success", "not_modified", "redirect")
+                    ~F.col("status").isin(OP_SUCCESS, OP_NOT_MODIFIED, OP_REDIRECT)
                 ).cast("int")
             )
             / F.count("*")

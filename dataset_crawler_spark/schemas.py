@@ -73,3 +73,23 @@ LINEAGE = T.StructType(
 LOG_ADDED = "added"
 LOG_UPDATED = "updated"
 LOG_DELETED = "deleted"
+
+#: per-operation status vocabulary of the fetch stage and the ops log
+#: (database_operations/CrawlerLogs.java:30-48: success|error|exception|
+#: time_out per request).
+OP_SUCCESS, OP_ERROR, OP_EXCEPTION, OP_TIMEOUT = "success", "error", "exception", "time_out"
+
+#: conditional-GET outcome beyond the reference's vocabulary: the server
+#: answered 304 Not Modified to our validators, so the stored document is
+#: current and no body crossed the wire. Not a failure (never retried, never
+#: counts against a host's budget) and not a plain success (nothing to diff).
+OP_NOT_MODIFIED = "not_modified"
+
+#: a 3xx surfaced instead of followed (http_fetch ``follow_redirects=False``):
+#: the row's spans carry one kind='redirect' span whose media_ref is the
+#: absolute target. Not a failure and not a document: the redirecting URL
+#: enters the seen set, and its target enters the NEXT round's discovered
+#: frontier through the same canonicalize → seen-filter → robots →
+#: politeness path as any outlink — so chains resolve one hop per closure
+#: round and cap at the loop's round limit.
+OP_REDIRECT = "redirect"

@@ -1,4 +1,4 @@
-"""Live HTTP fetch + probe stage — the production FetchFn over real sockets.
+"""Live HTTP fetch stage — the production FetchFn over real sockets.
 
 This fills the one promise the earlier rounds left open: ``simulated_fetcher``
 (streaming/rounds.py) documents "the production fetcher has the same signature
@@ -8,14 +8,13 @@ request" — this module IS that stage. Reference parity:
 - per-request fetch with timeout and per-operation status rows:
   data_crawler/DataCrawler.java:235-249 (connect/read timeouts),
   crawl_utils/CrawlerLogs.java:30-48 (status vocabulary
-  success|error|exception|time_out — reused verbatim);
-- endpoint availability probe before crawling:
-  data_crawler/DataCrawler.java:36-57 (LIMIT-1 probe, outcome logged either
-  way) — ``http_prober`` plugs into sources/probe.py's injectable slot;
-- body → interleaved-document parsing mirrors the batch sources: N-Triples
-  bodies follow sources/ntriples.py's span mapping (predicate → kind,
-  literal → text, IRI object → media_ref, line order → offset,
-  DatasetDumpCrawler.java:66-127), JSON bodies follow the engine's native
+  success|error|exception|time_out — reused verbatim, schemas.OP_*);
+- endpoint availability before crawling (data_crawler/DataCrawler.java:36-57)
+  is the robots.txt GET of sources/robots.hosts_dim_over_http: a 5xx,
+  timeout or refused connection marks the host unavailable for the round;
+- body → interleaved-document parsing: N-Triples bodies map predicate →
+  kind, literal → text, IRI object → media_ref, line order → offset
+  (DatasetDumpCrawler.java:66-127); JSON bodies follow the engine's native
   interchange ({"spans": [...]}, the CKAN/metadata path of
   metadata_crawler/Metadata.java:41-106).
 
@@ -44,29 +43,14 @@ from concurrent.futures import ThreadPoolExecutor
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-OP_SUCCESS, OP_ERROR, OP_EXCEPTION, OP_TIMEOUT = (
-    "success",
-    "error",
-    "exception",
-    "time_out",
+from dataset_crawler_spark.schemas import (
+    OP_ERROR,
+    OP_EXCEPTION,
+    OP_NOT_MODIFIED,
+    OP_REDIRECT,
+    OP_SUCCESS,
+    OP_TIMEOUT,
 )
-
-#: conditional-GET outcome beyond the reference's CrawlerLogs vocabulary: the
-#: server answered 304 Not Modified to our validators, so the stored state is
-#: current and NO body crossed the wire. Not a failure (never retried, never
-#: counts against a host's budget) and not a plain success (there is nothing
-#: to diff) — its own status so the ops log records the bandwidth saved.
-OP_NOT_MODIFIED = "not_modified"
-
-#: 3xx surfaced instead of silently followed (``follow_redirects=False``):
-#: the fetch stage reports the hop and the ENGINE decides — the target is
-#: queued through the discovery path (canonicalized, seen-filtered,
-#: robots-gated, politeness-budgeted like any outlink) instead of being
-#: fetched off-budget inside the opener, and chains cap at the closure
-#: loop's round limit rather than urllib's hidden limit. Not a failure
-#: (never retried, never counts against a host's budget): the redirecting
-#: URL is fully handled the moment its target is queued.
-OP_REDIRECT = "redirect"
 
 #: status codes that carry a Location worth following (RFC 9110 §15.4;
 #: 304 is handled by the conditional path, 300/305/306 carry no target)
@@ -96,7 +80,8 @@ FETCH_SCHEMA = (
 #: Last-Modified) so the engine can persist them and revalidate next round.
 FETCH_COND_SCHEMA = FETCH_SCHEMA + ", etag string, last_modified string"
 
-# Same triple grammar as sources/ntriples.py (kept in sync — parity-tested).
+# N-Triples line grammar (W3C N-Triples: subject IRI, predicate IRI, object
+# IRI or literal with optional @lang / ^^datatype; blank nodes unsupported).
 _TRIPLE_RE = re.compile(r"^\s*<([^>]+)>\s+<([^>]+)>\s+(.*?)\s*\.\s*$")
 _LIT_RE = re.compile(r'^"(.*)"(?:\^\^<[^>]+>|@[A-Za-z-]+)?$')
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -104,9 +89,7 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 def span_dict(s: dict, i: int) -> dict:
     """Normalize one JSON span object to the interleaved span shape
-    (shared by parse_spans and sources/endpoint_scan._page_docs so the
-    defaulting rules can never diverge). Raises on non-dict input — callers
-    decide their malformation policy."""
+    (offset defaults to list position). Raises on non-dict input."""
     return {
         "kind": s.get("kind", "text"),
         "text": s.get("text"),
@@ -121,8 +104,11 @@ def parse_spans(content_type: str, body: bytes) -> list[dict]:
     - ``application/json``: the engine interchange — ``{"spans": [...]}`` with
       each span ``{kind, text, media_ref, offset}`` (offset defaults to list
       position); a bare list is treated as the span list itself.
-    - ``application/n-triples``: per-line triples, sources/ntriples.py span
-      mapping, offsets = line order (DatasetDumpCrawler.java:66-127 twin).
+    - ``application/n-triples``: per-line triples (rdf:type → kind
+      ``rdf:type`` with the class IRI as text; other predicates → kind =
+      predicate IRI, literal → text, IRI object → media_ref), malformed
+      lines skipped, offsets = line order (DatasetDumpCrawler.java:66-127
+      twin).
     - anything else: the whole body as a single ``kind='text'`` span.
     """
     ctype = (content_type or "").split(";")[0].strip().lower()
@@ -383,31 +369,3 @@ def fetch_texts(
 
     return df.mapInPandas(run, out_schema)
 
-
-def http_prober(timeout_s: float = 5.0):
-    """Real-socket Prober for sources/probe.py (DataCrawler.java:36-57 twin):
-    GET each endpoint with a LIMIT-1-ish byte-range; classify with the same
-    vocabulary as the fetch stage. Hosts without a scheme probe as http://."""
-
-    def probe(urls: pd.Series) -> tuple[pd.Series, pd.Series]:
-        statuses, messages = [], []
-        for u in urls:
-            target = u if "://" in u else f"http://{u}/"
-            req = urllib.request.Request(
-                target, headers={"User-Agent": USER_AGENT, "Range": "bytes=0-0"}
-            )
-            try:
-                with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                    resp.read(1)
-                statuses.append(OP_SUCCESS)
-                messages.append("probe ok")
-            except Exception as exc:
-                status, message = _classify(exc)
-                statuses.append(status)
-                messages.append(f"probe {message}")
-        return (
-            pd.Series(statuses, index=urls.index),
-            pd.Series(messages, index=urls.index),
-        )
-
-    return probe

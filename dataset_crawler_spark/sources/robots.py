@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataset_crawler_spark.schemas import OP_ERROR, OP_SUCCESS
+
 ROBOTS_RULES_SCHEMA = (
     "robots_disallow array<string>, crawl_delay_ms int, "
     "robots_rules array<struct<rx string, rlen int, allow boolean>>"
@@ -400,8 +402,8 @@ def hosts_dim_over_http(
         fetched = hosts
     else:
         fetched = fetch_robots(hosts, url_col=url_col, timeout_s=timeout_s)
-    ok = F.col("status") == "success"
-    not_found = (F.col("status") == "error") & F.col("message").rlike("^4")
+    ok = F.col("status") == OP_SUCCESS
+    not_found = (F.col("status") == OP_ERROR) & F.col("message").rlike("^4")
     dim = hosts_dim_from_robots(
         fetched.select("host", F.when(ok, F.col("body")).alias("robots_txt")),
         default_delay_ms=default_delay_ms,
@@ -438,12 +440,12 @@ def sitemap_frontier_over_http(
     from dataset_crawler_spark.sources.http_fetch import fetch_texts
 
     maps = sitemap_urls(
-        robots_fetched.where(F.col("status") == "success")
+        robots_fetched.where(F.col("status") == OP_SUCCESS)
         .select("host", F.col("body").alias("robots_txt"))
     )
     fetched = fetch_texts(maps, "sitemap_url", timeout_s=timeout_s)
     return sitemap_seeds(
-        fetched.where(F.col("status") == "success").select(
+        fetched.where(F.col("status") == OP_SUCCESS).select(
             "host", F.col("body").alias("sitemap_xml")
         ),
         priority=priority,

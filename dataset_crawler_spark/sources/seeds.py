@@ -1,4 +1,4 @@
-"""Seed-list source (S1/S2, SURVEY.md §2.1).
+"""Seed-list source (S1, SURVEY.md §2.1).
 
 Twin of the reference's TSV seed parsing — ``id \\t endpoint_url \\t
 description`` per line, malformed (<3 field) lines skipped, file order = crawl
@@ -37,16 +37,3 @@ def read_seed_list(spark: SparkSession, path: str) -> DataFrame:
         "description",
     )
 
-
-def read_config(path: str) -> dict[str, str]:
-    """key=value config file → dict (S2, FileUtils.java:297-313).
-    Driver-side — config never needs a DataFrame."""
-    out: dict[str, str] = {}
-    with open(path) as f:
-        for line in f:
-            line = line.strip()
-            if not line or line.startswith("#") or "=" not in line:
-                continue
-            k, v = line.split("=", 1)
-            out[k.strip()] = v.strip()
-    return out

@@ -31,7 +31,16 @@ from dataset_crawler_spark.operators.graph import opic_step as G_opic_step
 from dataset_crawler_spark.operators import scheduler as SCH
 from dataset_crawler_spark.operators import seen as SN
 from dataset_crawler_spark.operators import state as S
-from dataset_crawler_spark.schemas import SPAN, empty_df
+from dataset_crawler_spark.schemas import (  # noqa: F401 — OP_* re-exported
+    OP_ERROR,
+    OP_EXCEPTION,
+    OP_NOT_MODIFIED,
+    OP_REDIRECT,
+    OP_SUCCESS,
+    OP_TIMEOUT,
+    SPAN,
+    empty_df,
+)
 from dataset_crawler_spark.sources.snapshots import SnapshotStore
 
 STATE_SCHEMA = T.StructType(
@@ -45,30 +54,11 @@ STATE_SCHEMA = T.StructType(
 
 #: fetch_fn(spark, scheduled: DataFrame[url_c, ...]) ->
 #: DataFrame[doc_id, spans, status, message], one row per scheduled URL (a URL
-#: with no row is logged as error). status is one of the OP_* values below
+#: with no row is logged as error). status is one of the schemas.OP_* values
 #: (CrawlerLogs.java:30-48 vocabulary plus not_modified / redirect); only
 #: success rows reach the diff, the others are logged and, if failures,
 #: retryable. A conditional fetcher may add etag / last_modified columns.
 FetchFn = Callable[[SparkSession, DataFrame], DataFrame]
-
-#: per-operation status vocabulary (database_operations/CrawlerLogs.java:30-48)
-OP_SUCCESS, OP_ERROR, OP_EXCEPTION, OP_TIMEOUT = "success", "error", "exception", "time_out"
-
-#: conditional-GET outcome (sources/http_fetch.OP_NOT_MODIFIED): the server
-#: confirmed the stored document is current (304) — not a failure (never
-#: retried, never counts against a host's budget), not a plain success
-#: (nothing to diff).
-OP_NOT_MODIFIED = "not_modified"
-
-#: surfaced 3xx (sources/http_fetch.OP_REDIRECT, follow_redirects=False):
-#: the row's spans carry one kind='redirect' span whose media_ref is the
-#: absolute target. Not a failure (never retried, never counts against a
-#: host's budget) and not a document: the redirecting URL enters the seen
-#: set (it IS fully handled) and its target enters the NEXT round's
-#: discovered frontier through the same canonicalize → seen-filter →
-#: robots → politeness path as any outlink — so chains resolve one hop per
-#: closure round and cap at the loop's round limit.
-OP_REDIRECT = "redirect"
 
 
 class CrawlEngine:
@@ -207,7 +197,6 @@ class CrawlEngine:
         bloom_params: SN.BloomParams | None = None,
         description: str = "",
         mode: str = "discover",
-        extra_ops: DataFrame | None = None,
         discover_links: bool = False,
         adapt_budgets: bool = False,
         budget_lookback: int = 3,
@@ -271,12 +260,16 @@ class CrawlEngine:
         discover = mode == "discover"
         partial = mode != "full"  # refresh keeps the partial diff (no deletes)
         seen = self.seen_urls_as_of(prev_round) if discover else None
-        bloom_state = None
-        if discover and bloom_params is not None:
-            bloom_state = self.bloom_as_of(prev_round)
+        # one read of the previous round's bloom serves both the schedule's
+        # probe (discover mode) and this round's merge below
+        prev_bloom = self.bloom_as_of(prev_round) if bloom_params is not None else None
 
         sched = SCH.schedule_round(
-            frontier, hosts, bloom_state=bloom_state, bloom_params=bloom_params, seen_urls=seen
+            frontier,
+            hosts,
+            bloom_state=prev_bloom if discover else None,
+            bloom_params=bloom_params,
+            seen_urls=seen,
         ).cache()
         n_scheduled = sched.count()
         fetch_input = sched
@@ -318,11 +311,6 @@ class CrawlEngine:
                 "discovered_crawl_id",
             )
         )
-        if extra_ops is not None:
-            # e.g. endpoint-probe status rows (sources/probe.py) — the round's
-            # ops_log partition is written once, so upstream stages hand their
-            # rows in rather than appending separately
-            ops_log = ops_log.unionByName(extra_ops)
         self.store.append("ops_log", ops_log, crawl_id)
 
         if discover_links:
@@ -393,7 +381,6 @@ class CrawlEngine:
         )
         self.store.append("fetched", fetched, crawl_id)
         if bloom_params is not None:
-            prev_bloom = self.bloom_as_of(prev_round)
             new_shards = SN.bloom_build(fetched, "url_c", bloom_params)
             merged = (
                 SN.bloom_merge(prev_bloom, new_shards)

@@ -64,6 +64,18 @@ def test_cli_crawl_live(spark, tmp_path, server, capsys):
         assert got[f"{server}/doc/{i}"] == want
 
 
+def test_cli_crawl_resumed_store_prints_store_round_ids(spark, tmp_path, server, capsys):
+    # a second crawl on the same store continues at the store's next round;
+    # the printed round ids are the committed ones, not the loop index
+    store = str(tmp_path / "resumed")
+    args = ["crawl", "--seed-url", f"{server}/doc/0",
+            "--store", store, "--rounds", "1", "--timeout", "5"]
+    assert main(args) == 0
+    assert main(args) == 0
+    rounds = [json.loads(x)["round"] for x in capsys.readouterr().out.strip().splitlines()]
+    assert rounds == SnapshotStore(store, spark).committed_rounds() == [0, 1]
+
+
 def test_cli_crawl_requires_seeds(capsys):
     assert main(["crawl"]) == 2
 

@@ -9,7 +9,7 @@ from pyspark.sql import types as T
 from dataset_crawler_spark import datagen
 from dataset_crawler_spark.operators import diff as D
 from dataset_crawler_spark.operators import state as S
-from dataset_crawler_spark.oracle.crawler_oracle import CrawlerOracle
+from dataset_crawler_spark.oracle.crawler_oracle import CrawlerOracle, span_ops_for_doc
 from dataset_crawler_spark.schemas import SPAN
 
 N_DOCS = 400
@@ -162,16 +162,16 @@ def test_reconstruction_equals_incremental_state(spark):
         assert visible(state) == visible(rebuilt) == oracle.visible_docs(), f"as_of={rnd}"
 
 
-def test_span_ops_narrow_explode_parity(spark):
-    """The narrow array-expression span diff and the explode/shuffle span
-    diff must be byte-identical — including docs above NARROW_DIFF_MAX_SPANS
-    (the hybrid threshold), duplicate spans, and out-of-order offsets."""
+def test_span_ops_explode_matches_oracle(spark):
+    """The explode/shuffle span diff equals the oracle's per-doc occurrence
+    diff — on docs of up to 300 spans, with duplicate spans and shuffled,
+    out-of-order span arrays."""
     import random
 
     rng = random.Random(42)
     rows = []
     for d in range(30):
-        n = rng.choice([3, 9, 40, 300])  # 300 > NARROW_DIFF_MAX_SPANS
+        n = rng.choice([3, 9, 40, 300])
         base = [
             ("text" if i % 3 else "link",
              f"tok{rng.randrange(5)}" if i % 3 else None,
@@ -191,20 +191,14 @@ def test_span_ops_narrow_explode_parity(spark):
         "media_ref:string,offset:int>>, live_spans array<struct<kind:string,"
         "text:string,media_ref:string,offset:int>>",
     )
-    via_explode = {
+    got = {
         r.doc_id: [(o.kind, o.offset, o.op) for o in r.span_ops]
         for r in D.span_ops_for_changed(changed).collect()
     }
-    via_narrow = {
-        r.doc_id: [(o.kind, o.offset, o.op) for o in r.span_ops]
-        for r in changed.select(
-            "doc_id",
-            D.span_ops_narrow(F.col("prev_spans"), F.col("live_spans")).alias("span_ops"),
-        ).collect()
-    }
-    for d, ops in via_narrow.items():
-        assert ops == via_explode.get(d, []), d
-    assert any(len(v) > 0 for v in via_narrow.values())
+    want = {d: span_ops_for_doc(base, live) for d, base, live in rows}
+    assert sum(1 for ops in want.values() if ops) > 1
+    for d, ops in want.items():
+        assert got.get(d, []) == ops, d
 
 
 def test_tombstone_resurrection_semantics(spark):

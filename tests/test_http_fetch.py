@@ -1,11 +1,11 @@
-"""Real-socket fetch path: mapInPandas HTTP fetcher + prober against an
-in-process loopback HTTP server (no external network).
+"""Real-socket fetch path: mapInPandas HTTP fetcher against an in-process
+loopback HTTP server (no external network).
 
 Covers the production promises of sources/http_fetch.py: per-request status
 vocabulary (CrawlerLogs.java:30-48 parity — success/error/exception/time_out),
 body→span parsing twins (JSON interchange + N-Triples), the full
 CrawlEngine.crawl_round lifecycle over sockets including timeout→ops_log
-rows and retry-requeue, and the S3 endpoint probe upgraded from stub to HTTP.
+rows and retry-requeue, and robots.txt availability (S3) over HTTP.
 """
 
 from __future__ import annotations
@@ -22,10 +22,8 @@ from dataset_crawler_spark.operators import seen as SN
 from dataset_crawler_spark.sources.http_fetch import (
     fetch_one,
     http_fetcher,
-    http_prober,
     parse_spans,
 )
-from dataset_crawler_spark.sources.probe import probe_hosts
 from dataset_crawler_spark.streaming.rounds import CrawlEngine
 
 N_OK = 12  # /doc/0..5 JSON + /nt/0..5 ntriples
@@ -187,21 +185,28 @@ def test_fetch_one_statuses(server):
     assert refused[0] == "exception"
 
 
-def test_parse_spans_ntriples_matches_batch_source(server, spark, tmp_path):
-    """The HTTP N-Triples parser and sources/ntriples.py produce identical
-    span sequences for the same body (kind, text, media_ref, order)."""
-    from dataset_crawler_spark.sources.ntriples import dump_to_documents
-
-    body = _nt_body(4)
-    p = tmp_path / "d.nt"
-    p.write_text(body)
-    batch = dump_to_documents(spark, str(p)).collect()
-    assert len(batch) == 1
-    batch_spans = [(s.kind, s.text, s.media_ref, s.offset) for s in batch[0].spans]
-
-    live = parse_spans("application/n-triples", body.encode())
-    live_spans = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in live]
-    assert live_spans == batch_spans
+def test_parse_spans_ntriples_matches_batch_source():
+    """The N-Triples body mapping, pinned by hand to the spans the retired
+    batch dump source produced for the same lines: rdf:type → kind
+    'rdf:type' with the class IRI as text; other predicates → kind =
+    predicate IRI, literal (plain, @lang or ^^datatype) → text, IRI object →
+    media_ref; offsets in line order; a malformed line is skipped."""
+    body = (
+        "<http://ex.org/r1> <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <http://ex.org/TypeA> .\n"
+        '<http://ex.org/r1> <http://ex.org/p/name> "Alice" .\n'
+        "<http://ex.org/r1> <http://ex.org/p/knows> <http://ex.org/r2> .\n"
+        '<http://ex.org/r2> <http://ex.org/p/name> "Bob"@en .\n'
+        '<http://ex.org/r2> <http://ex.org/p/age> "42"^^<http://www.w3.org/2001/XMLSchema#int> .\n'
+        "not a triple\n"
+    )
+    spans = parse_spans("application/n-triples", body.encode())
+    assert [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans] == [
+        ("rdf:type", "http://ex.org/TypeA", None, 0),
+        ("http://ex.org/p/name", "Alice", None, 1),
+        ("http://ex.org/p/knows", None, "http://ex.org/r2", 2),
+        ("http://ex.org/p/name", "Bob", None, 3),
+        ("http://ex.org/p/age", "42", None, 4),
+    ]
 
 
 # -- engine level: crawl_round over real sockets ------------------------------
@@ -303,20 +308,6 @@ def test_crawl_round_over_http(spark, tmp_path, server):
     ).collect()
     assert len(slow_doc) == 1
     assert [s.text for s in slow_doc[0].spans] == ["too late"]
-
-
-def test_probe_hosts_over_http(spark, server):
-    host = server.split("://")[1]
-    hosts = spark.createDataFrame(
-        [(host, 100, 10, [], True), ("127.0.0.1:1", 100, 10, [], True)],
-        "host string, crawl_delay_ms int, max_fetch_per_round int, "
-        "robots_disallow array<string>, is_available boolean",
-    )
-    probed = {r.host: (r.is_available, r.probe_status) for r in
-              probe_hosts(hosts, prober=http_prober(timeout_s=1.0)).collect()}
-    assert probed[host] == (True, "success")
-    assert probed["127.0.0.1:1"][0] is False
-    assert probed["127.0.0.1:1"][1] == "exception"
 
 
 def test_robots_and_sitemaps_over_http(spark, server):

@@ -267,50 +267,6 @@ def test_ops_log_records_failures_and_retry_requeues(spark, tmp_path):
     retry.unpersist()
 
 
-def test_endpoint_probe_gates_hosts_and_logs_status(spark, tmp_path):
-    """S3 as an OPERATION (DataCrawler.java:36-57): the probe stage issues a
-    LIMIT-1-style check per endpoint (deterministic stub in this no-network
-    sandbox), rewrites is_available from the probe RESULT, records one ops-log
-    row per host, and unavailable hosts schedule nothing."""
-    from dataset_crawler_spark.sources import probe as PR
-
-    eng = CrawlEngine(spark, str(tmp_path / "store"))
-    frontier = _frontier(spark)
-    hosts = _open_hosts(spark)
-
-    def half_down(urls):
-        import pandas as pd
-        down = urls.str.slice(4, 8).astype(int) % 2 == 1  # hostNNNN parity
-        return (
-            pd.Series(["time_out" if d else "success" for d in down], index=urls.index),
-            pd.Series(["probe timed out" if d else "ok" for d in down], index=urls.index),
-        )
-
-    probed = PR.probe_hosts(hosts, half_down)
-    down_hosts = {r.host for r in probed.where(~F.col("is_available")).collect()}
-    assert down_hosts == {f"host{i:04d}.example.org" for i in range(N_HOSTS) if i % 2 == 1}
-
-    s0 = eng.crawl_round(
-        frontier, probed, simulated_fetcher(_corpus(spark, 0)), 0,
-        mode="discover", extra_ops=PR.probe_ops_rows(probed, 0),
-    )
-    ops = eng.ops_log_as_of(0)
-    probe_rows = {r.host: r.status for r in ops.where(F.col("stage") == "probe").collect()}
-    assert len(probe_rows) == N_HOSTS  # one status row per endpoint
-    assert {h for h, s in probe_rows.items() if s != "success"} == down_hosts
-    # gated: nothing scheduled (hence fetched) on a down host
-    fetched_hosts = {
-        r.h for r in eng.store.read("fetched", as_of=0)
-        .select(F.regexp_extract("url_c", r"https://([^/]+)/", 1).alias("h")).collect()
-    }
-    assert s0["fetched"] > 0 and not (fetched_hosts & down_hosts)
-
-    # default stub prober is deterministic across invocations
-    a = {(r.host, r.probe_status) for r in PR.probe_hosts(hosts).collect()}
-    b = {(r.host, r.probe_status) for r in PR.probe_hosts(hosts).collect()}
-    assert a == b
-
-
 def test_refresh_frontier_ranks_changed_docs_first(spark, tmp_path):
     """After two full rounds, refresh_frontier must rank by change history:
     docs changed in round 1 (score 0.5·decay⁰ from r0 + 1.0 from r1 = 1.5)

@@ -1,7 +1,7 @@
 """Every module of the package is reached from an entry point.
 
-The roots are the CLI (``__main__``), the sources (``sources/``) and the
-benchmark (``crawlbench/*.py``); the round engine is reached from the CLI.
+The roots are the CLI (``__main__``) and the benchmark (``crawlbench/*.py``);
+the round engine and the sources are reached from them.
 The import graph is read from the AST, imports inside functions included.
 ``oracle/`` holds the plain-Python twins the tests compare against, so it is
 exempt.
@@ -39,8 +39,7 @@ def _imports(path, modules):
 
 def test_every_package_module_is_reached():
     modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
-    roots = [p for p in modules.values()
-             if p.name == "__main__.py" or p.parent.name == "sources"]
+    roots = [p for p in modules.values() if p.name == "__main__.py"]
     todo = roots + sorted((ROOT / "crawlbench").glob("*.py"))
     reached = set()
     while todo:

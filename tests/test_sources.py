@@ -1,24 +1,14 @@
-"""Seed-list, config, and N-Triples sources (S1/S2/S8)."""
+"""Seed-list (S1), robots.txt and sitemap sources."""
 
 from __future__ import annotations
 
-from dataset_crawler_spark.sources.ntriples import dump_to_documents, read_ntriples
-from dataset_crawler_spark.sources.seeds import read_config, read_seed_list
+from dataset_crawler_spark.sources.seeds import read_seed_list
 
 SEEDS = """1\thttp://data.example.org/sparql\tfirst dataset
 bad line without tabs
 2\thttp://other.example.org/sparql\tsecond dataset
 3\thttp://third.example.org/sparql\tthird
 """
-
-NT = """<http://ex.org/r1> <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <http://ex.org/TypeA> .
-<http://ex.org/r1> <http://ex.org/p/name> "Alice" .
-<http://ex.org/r1> <http://ex.org/p/knows> <http://ex.org/r2> .
-<http://ex.org/r2> <http://ex.org/p/name> "Bob"@en .
-<http://ex.org/r2> <http://ex.org/p/age> "42"^^<http://www.w3.org/2001/XMLSchema#int> .
-not a triple
-"""
-
 
 def test_seed_list_order_and_malformed_filter(spark, tmp_path):
     p = tmp_path / "seeds.tsv"
@@ -27,86 +17,6 @@ def test_seed_list_order_and_malformed_filter(spark, tmp_path):
     assert [r.seed_rank for r in rows] == [0, 1, 2]
     assert [r.seed_id for r in rows] == ["1", "2", "3"]
     assert rows[0].url == "http://data.example.org/sparql"
-
-
-def test_read_config(tmp_path):
-    p = tmp_path / "crawl.ini"
-    p.write_text("timeout=100000\n# comment\nmax_res_instances = 5000\n\n")
-    cfg = read_config(str(p))
-    assert cfg == {"timeout": "100000", "max_res_instances": "5000"}
-
-
-def test_ntriples_parse_and_group(spark, tmp_path):
-    p = tmp_path / "dump.nt"
-    p.write_text(NT)
-    triples = read_ntriples(spark, str(p)).collect()
-    assert len(triples) == 5  # malformed line dropped
-    docs = {r.doc_id: r.spans for r in dump_to_documents(spark, str(p)).collect()}
-    assert set(docs) == {"http://ex.org/r1", "http://ex.org/r2"}
-    r1 = [(s.kind, s.text, s.media_ref, s.offset) for s in docs["http://ex.org/r1"]]
-    assert r1 == [
-        ("rdf:type", "http://ex.org/TypeA", None, 0),
-        ("http://ex.org/p/name", "Alice", None, 1),
-        ("http://ex.org/p/knows", None, "http://ex.org/r2", 2),
-    ]
-    r2 = [(s.kind, s.text) for s in docs["http://ex.org/r2"]]
-    assert r2 == [("http://ex.org/p/name", "Bob"), ("http://ex.org/p/age", "42")]
-
-
-def test_ntriples_multifile_offsets_pinned(spark, tmp_path):
-    """A subject spread over several dump files gets span offsets in
-    (lexicographic file path, in-file line) order — pinned, so cross-file
-    interleaving by partition id (the failure mode of a bare
-    monotonically_increasing_id sort key) would break this exactly."""
-    d = tmp_path / "dump"
-    d.mkdir()
-    (d / "part_a.nt").write_text(
-        '<http://ex.org/r1> <http://ex.org/p/x> "a1" .\n'
-        '<http://ex.org/r1> <http://ex.org/p/x> "a2" .\n'
-        '<http://ex.org/r2> <http://ex.org/p/x> "a3" .\n'
-    )
-    (d / "part_b.nt").write_text(
-        '<http://ex.org/r1> <http://ex.org/p/x> "b1" .\n'
-        '<http://ex.org/r2> <http://ex.org/p/x> "b2" .\n'
-        '<http://ex.org/r1> <http://ex.org/p/x> "b3" .\n'
-    )
-    docs = {r.doc_id: r.spans for r in dump_to_documents(spark, str(d)).collect()}
-    assert [(s.text, s.offset) for s in docs["http://ex.org/r1"]] == [
-        ("a1", 0), ("a2", 1), ("b1", 2), ("b3", 3)
-    ]
-    assert [(s.text, s.offset) for s in docs["http://ex.org/r2"]] == [
-        ("a3", 0), ("b2", 1)
-    ]
-
-
-CKAN = """{"id":"ds1","name":"dbpedia","title":"DBpedia","notes":"RDF of wikipedia",
- "tags":[{"name":"lod"},{"name":"publication"}],"groups":[{"name":"lodcloud"}],
- "resources":[{"url":"http://dbpedia.org/dump.nt","format":"ntriples","description":"dump"},
-              {"url":"http://dbpedia.org/sparql","format":"api/sparql","description":"SPARQL endpoint"}]}"""
-
-CKAN_NO_EP = """{"id":"ds2","name":"csvonly","title":"CSV only","notes":null,
- "tags":[],"groups":[{"name":"gov"}],
- "resources":[{"url":"http://x.org/data.csv","format":"CSV","description":"csv file"}]}"""
-
-
-def test_ckan_metadata(spark):
-    from dataset_crawler_spark.sources.ckan import (
-        parse_ckan_packages,
-        publication_content_filter,
-    )
-
-    df = spark.createDataFrame([(CKAN,), (CKAN_NO_EP,), ("not json",)], "payload string")
-    rows = {r.dataset_id: r for r in parse_ckan_packages(df).collect() if r.dataset_id}
-    assert rows["ds1"].endpoint_url == "http://dbpedia.org/sparql"
-    assert rows["ds1"].has_sparql_endpoint
-    assert rows["ds1"].tags == ["lod", "publication"]
-    assert rows["ds2"].endpoint_url is None and not rows["ds2"].has_sparql_endpoint
-    # malformed JSON degrades to null metadata, not an error
-    assert len(rows) == 2
-
-    parsed = parse_ckan_packages(df).where("dataset_id is not null")
-    kept = {r.dataset_id for r in publication_content_filter(parsed, "publication").collect()}
-    assert kept == {"ds1"}
 
 
 ROBOTS = """# global rules
